@@ -191,9 +191,11 @@ def maintain_ohlc_rollup(
     appended since the state table's own high-water mark into the state.
 
     Reads ONLY the appended files (commit-log fast path — no history scan)
-    and merges ONLY touched (key, date) state rows, upserted via the
-    snapshot table's keyed MERGE.  Returns the base-table version the state
-    now reflects.
+    and folds the delta's partial state into the stored rows of the
+    (key, date) groups it touches by ONE narrowed ``upsert`` with
+    ``combine=merge_ohlc_states``: one state snapshot read, one key-range
+    check and one read of the state files that can hold those groups.
+    Returns the base-table version the state now reflects.
 
     Exactly-once under crash/retry: the consumed base version travels as
     the txn id of the state commit itself, so there is no window where the
@@ -220,15 +222,14 @@ def maintain_ohlc_rollup(
         CommitConflictError,
         append,
         current_snapshot,
-        files_overlapping_all_keys,
-        read_parts,
         snapshot_changes,
         upsert,
     )
 
     # the CAS anchor: the state version THIS run's read is based on
-    # (-1 for an absent/empty table — the bootstrap commit is then v0)
-    state_v = current_snapshot(state_table).version
+    # (-1 for an absent table — the bootstrap commit is then v0)
+    state_snap = current_snapshot(state_table)
+    state_v = state_snap.version
     consumed = rollup_high_water_mark(state_table)
     head = current_snapshot(base_table).version
     if head <= consumed:
@@ -251,7 +252,6 @@ def maintain_ohlc_rollup(
                 "contract violated) — retry the run"
             )
 
-    state_snap = current_snapshot(state_table, version=state_v)
     if not state_snap.files:  # state table absent/empty — bootstrap run
         _guard()
         try:
@@ -262,28 +262,18 @@ def maintain_ohlc_rollup(
         except CommitConflictError as exc:
             raise ConcurrentMaintenanceError(str(exc)) from exc
         return head
-    # only groups the delta touches participate in the merge, and the
-    # prior-state READ narrows to the files whose key ranges overlap
-    # the delta (round 13) — fold work is bounded by the delta's key
-    # spread, never the accumulated state size
-    delta_state = delta_state.localCheckpoint(eager=False)
-    touched, _ = files_overlapping_all_keys(
-        spark, state_snap, delta_state, keys
-    )
-    if touched:
-        old_touched = read_parts(
-            spark, state_table, touched, schema_files=state_snap.files
-        ).join(delta_state.select(*keys), keys, "left_semi")
-        merged = merge_ohlc_states(
-            old_touched, delta_state, key_cols=key_cols
-        )
-    else:  # every delta key is brand-new: pure insert
-        merged = delta_state
     _guard()  # cheap fast-fail; the CAS below is the guarantee
     try:
+        # one narrowed fold: only groups the delta touches are read and
+        # merged, from the files whose key ranges can hold them, so fold
+        # work is bounded by the delta's key spread, never the
+        # accumulated state size
         upsert(
-            spark, merged, state_table, key_cols=keys, txn_id=txn,
-            expect_version=state_v,
+            spark, delta_state, state_table,
+            key_cols=keys, txn_id=txn, expect_version=state_v,
+            combine=lambda old, new: merge_ohlc_states(
+                old, new, key_cols=key_cols
+            ),
         )
     except CommitConflictError as exc:
         raise ConcurrentMaintenanceError(str(exc)) from exc

@@ -33,6 +33,7 @@ import datetime as _dt
 import json
 import os
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,6 +75,11 @@ def _list_versions(table: str) -> list[int]:
     )
 
 
+def _read_entry(table: str, version: int) -> dict:
+    with open(_log_path(table, version)) as fh:
+        return json.load(fh)
+
+
 def current_snapshot(table: str, version: int | None = None) -> Snapshot:
     """Replay the commit log up to ``version`` (default: latest).  The
     returned file set IS the table at that version."""
@@ -86,8 +92,7 @@ def current_snapshot(table: str, version: int | None = None) -> Snapshot:
     meta: dict = {}
     last = -1
     for v in versions:
-        with open(_log_path(table, v)) as fh:
-            entry = json.load(fh)
+        entry = _read_entry(table, v)
         for a in entry.get("add", []):
             files.add(a)
             if a in entry.get("stats", {}):
@@ -117,8 +122,7 @@ def _txn_entry(table: str, txn_id: str) -> tuple[int, dict] | None:
     (fresh txn) still reads the whole log once — same cost as the
     ``current_snapshot`` replay every commit already pays."""
     for v in reversed(_list_versions(table)):
-        with open(_log_path(table, v)) as fh:
-            entry = json.load(fh)
+        entry = _read_entry(table, v)
         if entry.get("txn_id") == txn_id:
             return v, entry
     return None
@@ -295,94 +299,123 @@ def read_snapshot(
     return df
 
 
-#: dtypes files_overlapping_keys can range-test; everything else falls
-#: back to "every file touched" (conservative, never incorrect)
+#: dtypes the key-range check can test, mapped to the SQL type both the
+#: probe values and the logged bounds are compared in; a key column of
+#: any other dtype is an unbounded range (conservative, never incorrect)
 _RANGE_TEST_TYPES = {
     "int": "bigint", "bigint": "bigint", "smallint": "bigint",
     "tinyint": "bigint", "float": "double", "double": "double",
     "string": "string", "date": "string",
 }
 
+#: the native JSON types of logged bounds that compare faithfully in
+#: each SQL type, and the coercion into it
+_BOUND_TYPES = {
+    "bigint": ((int,), int),
+    "double": ((int, float), float),
+    "string": ((str,), str),
+}
 
-def files_overlapping_keys(
-    spark: SparkSession, snap: Snapshot, keys_df: DataFrame, col: str
+
+def _stat_range(file_stats: dict | None, col: str, sql_t: str):
+    """``(lo, hi)`` of ``col`` in one file's logged stats, coerced to
+    ``sql_t`` — or ``None`` when the file has no usable bound: stats
+    missing or malformed, or bounds whose native JSON type disagrees
+    with the probe's (round-14 ADVICE: str() on a bigint-keyed table's
+    int stats compared '100' < '99' lexicographically and could skip a
+    file that holds a matching key).  A faithful cross-type compare
+    exists only within the numeric family; bool is never a bound."""
+    rng = (file_stats or {}).get(col)
+    ok, coerce = _BOUND_TYPES[sql_t]
+    if not (
+        isinstance(rng, list)
+        and len(rng) == 2
+        and all(isinstance(x, ok) and not isinstance(x, bool) for x in rng)
+    ):
+        return None
+    return coerce(rng[0]), coerce(rng[1])
+
+
+def _files_overlapping(
+    spark: SparkSession,
+    snap: Snapshot,
+    probe_df: DataFrame,
+    pairs: list[tuple[str, str]],
 ) -> tuple[list[str], list[str]]:
-    """Split a snapshot's files into (touched, carried): a file is
-    TOUCHED when its logged [min, max] range of ``col`` can contain one
-    of the probe keys (``keys_df``'s single column) — the Delta/Iceberg
-    file-skipping test behind narrowed DELETE/MERGE rewrites, run
-    DISTRIBUTED: the broadcast side is the metadata-sized file-range
-    table, the key set streams past it, and only #files rows ever reach
-    the driver.  Files without stats for ``col``, and key dtypes
-    without a faithful cross-range comparison (timestamps survive the
-    stats JSON round-trip with a different text shape), conservatively
-    touch everything — narrowing may only ever widen, never miss a
-    matching row.  Integrals compare as bigint (a double cast would
-    lose >2^53 precision and could skip a file that matches)."""
-    probe_col = keys_df.columns[0]  # probe values; ``col`` names the
-    # stats column in the TARGET table (they may differ, e.g. the
-    # takedown set's normalized __td_id probing a doc_id-keyed table)
-    dtype = dict(keys_df.dtypes).get(probe_col)
-    sql_t = _RANGE_TEST_TYPES.get(dtype or "")
-    if sql_t is None:
-        return sorted(snap.files), []
-    if dtype == "date":
-        # stats hold ISO date strings; lexicographic == chronological
-        probe = keys_df.select(
-            F.col(probe_col).cast("string").alias("__k")
-        )
-    else:
-        probe = keys_df.select(
-            F.col(probe_col).cast(sql_t).alias("__k")
-        )
-    coerce = {"bigint": int, "double": float, "string": str}[sql_t]
-    # the logged stats carry the TARGET column's native JSON type; a
-    # probe whose dtype disagrees with it must not pick the comparison
-    # semantics (round-14 ADVICE: str() on a bigint-keyed table's int
-    # stats compared '100' < '99' lexicographically and could SKIP a
-    # file that contains a matching key — narrowing may only ever
-    # widen).  A faithful cross-type compare exists only within the
-    # numeric family; any other disagreement keeps the file.
-    ok_stat_types = {
-        "bigint": (int,),
-        "double": (int, float),
-        "string": (str,),
-    }[sql_t]
-    ranged, no_stats = [], []
+    """The key-range check behind both public forms.  ``pairs`` maps each
+    probe column of ``probe_df`` to the stats column it is tested
+    against in the target table.  A file is TOUCHED when one probe row
+    lies inside the file's logged [lo, hi] on EVERY pair; a pair the
+    file has no usable bound for is an unbounded range (true)."""
+    dtypes = dict(probe_df.dtypes)
+    # a probe column of an untestable dtype is unbounded on every file
+    tested = [
+        (p, c, _RANGE_TEST_TYPES[dtypes[p]])
+        for p, c in pairs
+        if dtypes[p] in _RANGE_TEST_TYPES
+    ]
+    bounded, unbounded = [], []
     for f in snap.files:
-        rng = (snap.stats.get(f) or {}).get(col)
-        try:
-            lo, hi = rng[0], rng[1]
-            if not (
-                isinstance(lo, ok_stat_types)
-                and isinstance(hi, ok_stat_types)
-                and not isinstance(lo, bool)
-                and not isinstance(hi, bool)
-            ):
-                raise TypeError("probe/stats dtype mismatch")
-            ranged.append((f, coerce(lo), coerce(hi)))
-        except (TypeError, ValueError, IndexError):
-            no_stats.append(f)  # absent/mistyped stats: keep the file
+        ranges = [_stat_range(snap.stats.get(f), c, t) for _, c, t in tested]
+        if all(r is None for r in ranges):
+            unbounded.append(f)  # no column can rule the file out
+        else:
+            bounded.append(
+                (f, *[v for r in ranges for v in (r or (None, None))])
+            )
     hits: set[str] = set()
-    if ranged:
-        rdf = spark.createDataFrame(
-            ranged, f"f string, lo {sql_t}, hi {sql_t}"
+    if bounded:
+        # one broadcast range join: the metadata-sized
+        # (f, lo_1, hi_1, …, lo_k, hi_k) table against the probe rows,
+        # all key columns ANDed per probe row; only #files rows ever
+        # reach the driver
+        ranges_df = spark.createDataFrame(
+            bounded,
+            ", ".join(
+                ["f string"]
+                + [
+                    f"lo_{i} {t}, hi_{i} {t}"
+                    for i, (_, _, t) in enumerate(tested)
+                ]
+            ),
         )
+        # dates cast to ISO strings, the form their stats are logged in
+        probe = probe_df.select(
+            *[
+                F.col(p).cast(t).alias(f"k_{i}")
+                for i, (p, _, t) in enumerate(tested)
+            ]
+        )
+        cond = F.lit(True)
+        for i in range(len(tested)):
+            lo = F.col(f"lo_{i}")
+            cond &= lo.isNull() | F.col(f"k_{i}").between(lo, F.col(f"hi_{i}"))
         hits = {
             r["f"]
-            for r in probe.distinct()
-            .join(
-                F.broadcast(rdf),
-                (F.col("__k") >= F.col("lo"))
-                & (F.col("__k") <= F.col("hi")),
-            )
+            for r in probe.join(F.broadcast(ranges_df), cond)
             .select("f")
             .distinct()
             .collect()
         }
-    touched = sorted(set(no_stats) | hits)
-    carried = [f for f in snap.files if f not in set(touched)]
-    return touched, carried
+    touched = set(unbounded) | hits
+    return (
+        sorted(touched),
+        [f for f in snap.files if f not in touched],
+    )
+
+
+def files_overlapping_keys(
+    spark: SparkSession, snap: Snapshot, keys_df: DataFrame, col: str
+) -> tuple[list[str], list[str]]:
+    """Split a snapshot's files into (touched, carried) by ONE key
+    column: a file is TOUCHED when its logged [min, max] range of
+    ``col`` can contain one of the probe values (``keys_df``'s single
+    column, which may be named differently — e.g. the takedown set's
+    normalized ``__td_id`` probing a ``doc_id``-keyed table).  The
+    one-column case of :func:`files_overlapping_all_keys`."""
+    return _files_overlapping(
+        spark, snap, keys_df, [(keys_df.columns[0], col)]
+    )
 
 
 def files_overlapping_all_keys(
@@ -391,20 +424,27 @@ def files_overlapping_all_keys(
     incoming: DataFrame,
     cols: list[str],
 ) -> tuple[list[str], list[str]]:
-    """Compound-key narrowing: a file can hold a row matching an
-    incoming key only if it overlaps on EVERY key column, so the
-    touched set is the INTERSECTION of the per-column overlap sets —
-    strictly tighter than any single column and still conservative
-    (each per-column test keeps stat-less or un-comparable files)."""
-    touched: set[str] | None = None
-    for c in cols:
-        t, _ = files_overlapping_keys(
-            spark, snap, incoming.select(c), c
-        )
-        touched = set(t) if touched is None else touched & set(t)
-    final = sorted(touched or set())
-    carried = [f for f in snap.files if f not in set(final)]
-    return final, carried
+    """Split a snapshot's files into (touched, carried) for a compound
+    key — the Delta/Iceberg file-skipping test behind narrowed
+    DELETE/MERGE rewrites.  A file is TOUCHED when ONE incoming row lies
+    inside the file's logged [min, max] on EVERY key column at once,
+    checked in a single pass: one broadcast range join of the incoming
+    keys against a ``(f, lo_1, hi_1, …, lo_k, hi_k)`` table built from
+    the logged stats, so the result is never looser than intersecting
+    per-column overlap sets and can be tighter (keys that overlap a
+    file on each column separately, but not together, skip it).
+
+    Conservative where the stats cannot decide: a key column whose
+    stats are missing, malformed or of a different native type than the
+    probe on a file, and every key column whose dtype has no faithful
+    range comparison (timestamps survive the stats JSON round-trip with
+    a different text shape), is an unbounded range — narrowing may only
+    ever widen, never miss a matching row.  Integrals compare as bigint
+    (a double cast would lose >2^53 precision and could skip a file
+    that matches); dates compare as ISO strings."""
+    return _files_overlapping(
+        spark, snap, incoming, [(c, c) for c in cols]
+    )
 
 
 def read_parts(
@@ -578,8 +618,9 @@ def commit(
     their check-to-commit race: the put-if-absent log file is the atomic
     arbiter, so exactly one of two racing writers can ever win."""
     for _ in range(max_retries):
-        version = (current_snapshot(table).version) + 1
-        if txn_id and txn_id in current_snapshot(table).txn_ids:
+        snap = current_snapshot(table)
+        version = snap.version + 1
+        if txn_id and txn_id in snap.txn_ids:
             return -1  # already committed by a racing idempotent retry
         if expect_version is not None and version != expect_version + 1:
             raise CommitConflictError(
@@ -784,13 +825,24 @@ def vacuum(table: str, keep_versions: int = 2) -> list[str]:
     versions = _list_versions(table)
     if not versions:
         return []
-    kept = versions[-keep_versions:]
+    # ONE forward replay: a part was live at some version exactly when an
+    # entry added it without removing it in that same entry, and the
+    # kept set is the union of the live sets after each of the last
+    # ``keep_versions`` entries — the same sets a per-version
+    # ``current_snapshot`` computes, without its O(V^2) log reads
+    kept = set(versions[-keep_versions:])
+    live: set[str] = set()
     keep_refs: set[str] = set()
-    for v in kept:
-        keep_refs.update(current_snapshot(table, v).files)
     ever_refs: set[str] = set()
     for v in versions:
-        ever_refs.update(current_snapshot(table, v).files)
+        entry = _read_entry(table, v)
+        removed = set(entry.get("remove", []))
+        added = [a for a in entry.get("add", []) if a not in removed]
+        live.update(entry.get("add", []))
+        live -= removed
+        ever_refs.update(added)
+        if v in kept:
+            keep_refs |= live
     doomed = sorted(ever_refs - keep_refs)
     for part in doomed:
         shutil.rmtree(os.path.join(table, _DATA_DIR, part),
@@ -823,15 +875,26 @@ def upsert(
     txn_id: str | None = None,
     expect_version: int | None | object = None,
     meta: dict | None = None,
+    combine: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
 ) -> int:
     """Copy-on-write MERGE (S8 semantics via operators/merge.upsert_by_key),
-    NARROWED (round 13, no longer aspirational): only the files whose
-    logged key ranges intersect the incoming batch on every key column
-    are read, merged and rewritten (:func:`files_overlapping_all_keys`);
-    every other file carries into the new snapshot by reference, so a
-    constant-size batch merges in constant work regardless of table
-    size.  A pure-insert batch (no file overlaps) removes nothing and
-    appends one part.
+    NARROWED: only the files whose logged key ranges can hold an
+    incoming key (:func:`files_overlapping_all_keys`) are read, merged
+    and rewritten; every other file carries into the new snapshot by
+    reference, so a constant-size batch merges in constant work
+    regardless of table size.  A pure-insert batch (no file overlaps)
+    removes nothing and appends one part.
+
+    ``combine(old_rows, incoming) -> new_rows`` turns the MERGE into a
+    FOLD: ``old_rows`` are the stored rows whose key is in ``incoming``
+    (read from the touched files only), and the rows it returns replace
+    them — e.g. ``merge_ohlc_states`` accumulating a batch's partial
+    state into the stored one.  The fold is narrowed ONCE: one snapshot
+    read, one key-range check and one read of the touched files serve
+    both the old-row lookup and the rewrite.  When no file can hold an
+    incoming key, ``combine`` is not called and ``incoming`` is inserted
+    as is, so ``combine(<no rows>, incoming)`` must equal ``incoming``
+    (true of any merge of partial states).
 
     Concurrency: ALWAYS CAS-anchored by default (round-14 ADVICE, the
     same discipline :func:`apply_changes` adopted in round 13): when
@@ -846,38 +909,45 @@ def upsert(
 
     ``txn_id`` makes a re-run idempotent exactly as in :func:`append`:
     if this id is already in the log, nothing is staged or committed and
-    -1 is returned (the exactly-once hook incremental consumers need —
-    a crash between commit and the caller persisting its offset must not
-    re-apply a non-idempotent merge like a count accumulation)."""
+    -1 is returned before any Spark job (the exactly-once hook
+    incremental consumers need — a crash between commit and the caller
+    persisting its offset must not re-apply a non-idempotent merge like
+    a count accumulation)."""
     from airflow_crypto_btc_spark.operators.merge import upsert_by_key
 
-    if txn_id and txn_id in current_snapshot(table).txn_ids:
-        return -1
     snap = current_snapshot(table)
+    if txn_id and txn_id in snap.txn_ids:
+        return -1
+    if not snap.files:
+        raise ValueError(f"upsert needs an existing snapshot at {table}")
     if expect_version is None:
         expect_version = snap.version
     elif expect_version is UNANCHORED:
         expect_version = None
-    # narrow the MERGE rewrite to the files whose logged key ranges can
-    # contain an incoming key (round 13 — previously every fold rewrote
-    # the whole state table): a matching existing row in a carried file
-    # would have to overlap the incoming keys on EVERY key column,
-    # which the per-column intersection just excluded, so carried
-    # files need no merge and move zero bytes.  Un-range-testable
-    # dtypes fall back to "touched" per column — conservative, never
-    # incorrect.
-    touched, carried = files_overlapping_all_keys(
-        spark, snap, incoming, list(key_cols)
-    )
+    if combine is not None:
+        # the fold reads ``incoming`` three times (key check, old-row
+        # lookup, combine): cut its lineage once, here, AFTER the txn
+        # check — an AQE checkpoint runs its shuffle stages even when
+        # lazy, so a replayed batch must return before this line
+        incoming = incoming.localCheckpoint(eager=False)
+    # a matching stored row in a carried file would have to lie inside
+    # the file's range on EVERY key column together with one incoming
+    # key, which the check just excluded, so carried files need no
+    # merge and move zero bytes
+    keys = list(key_cols)
+    touched, _ = files_overlapping_all_keys(spark, snap, incoming, keys)
     if touched:
         existing = read_parts(
             spark, table, touched, schema_files=snap.files
         )
+        if combine is not None:
+            old_rows = existing.join(
+                incoming.select(*keys), keys, "left_semi"
+            )
+            incoming = combine(old_rows, incoming)
     else:  # pure insert batch: no file overlaps any incoming key
-        existing = read_snapshot(
-            spark, table, version=snap.version
-        ).filter("1 = 0")
-    merged = upsert_by_key(existing, incoming, key_cols, update_cols)
+        existing = read_parts(spark, table, snap.files).filter("1 = 0")
+    merged = upsert_by_key(existing, incoming, keys, update_cols)
     parts, stats = _write_parts(merged, table)
     return commit(table, add=parts, remove=touched, operation="upsert",
                   txn_id=txn_id, stats=stats,
@@ -1076,9 +1146,9 @@ def apply_changes(
 
     from airflow_crypto_btc_spark.operators.merge import upsert_by_key
 
-    if txn_id and txn_id in current_snapshot(table).txn_ids:
-        return -1
     snap = current_snapshot(table)
+    if txn_id and txn_id in snap.txn_ids:
+        return -1
     if not snap.files:
         raise ValueError(
             f"apply_changes needs an existing snapshot at {table}; "

@@ -25,8 +25,6 @@ from collections.abc import Sequence
 from airflow_crypto_btc_spark.sources.snapshot_table import (
     append,
     current_snapshot,
-    files_overlapping_all_keys,
-    read_parts,
     upsert,
 )
 
@@ -57,15 +55,19 @@ def rollup_maintenance_sink(
     state table (`operators/incremental.py`) — streaming materialized-view
     maintenance with exactly-once state.
 
-    Each batch reduces to mergeable per-(key, day) state and is MERGE-
-    upserted under txn id ``<query_name>:<batch_id>``; a replayed batch
-    (sink-write/checkpoint-advance crash window) finds its txn recorded
-    and folds nothing.  This matters more here than for the append sink:
-    re-appending duplicate ROWS is visible and repairable, but re-MERGING
-    a batch silently corrupts ``n_obs`` — the non-idempotent-merge hazard.
-    Unlike the watermarked windowed-agg path, state lives in the table,
-    not executor state stores, so late rows need no watermark policy:
-    they merge into their day whenever they arrive.
+    Each batch reduces to mergeable per-(key, day) state and is folded
+    in by ONE narrowed ``upsert`` with ``combine=merge_ohlc_states``
+    under txn id ``<query_name>:<batch_id>``: the upsert reads the
+    stored rows of the batch's keys from the files whose key ranges can
+    hold them and rewrites only those files.  A replayed batch
+    (sink-write/checkpoint-advance crash window) returns at the upsert's
+    txn check before any Spark job.  This matters more here than for the
+    append sink: re-appending duplicate ROWS is visible and repairable,
+    but re-MERGING a batch silently corrupts ``n_obs`` — the
+    non-idempotent-merge hazard.  Unlike the watermarked windowed-agg
+    path, state lives in the table, not executor state stores, so late
+    rows need no watermark policy: they merge into their day whenever
+    they arrive.
     """
     from airflow_crypto_btc_spark.operators.incremental import (
         merge_ohlc_states,
@@ -74,41 +76,25 @@ def rollup_maintenance_sink(
 
     keys = [*key_cols, "date"]
 
+    def _combine(old, delta):
+        return merge_ohlc_states(old, delta, key_cols=key_cols)
+
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        delta_state = ohlc_state(
-            batch_df, ts_col, price_col, key_cols
-        ).localCheckpoint(eager=False)
+        delta_state = ohlc_state(batch_df, ts_col, price_col, key_cols)
         txn = f"{query_name}:{batch_id}"
         snap = current_snapshot(state_table)
         if not snap.files:  # first batch bootstraps the state table
             append(spark, delta_state, state_table, txn_id=txn)
             return
-        # the prior-state read narrows to the files whose key ranges
-        # overlap the batch (round 13): the fold's read AND its write
-        # (upsert narrows the same way) are both batch-bounded, so a
-        # constant-size batch folds in constant work no matter how
-        # large the accumulated state grows
-        touched, _ = files_overlapping_all_keys(
-            spark, snap, delta_state, keys
-        )
-        if touched:
-            old_touched = read_parts(
-                spark, state_table, touched, schema_files=snap.files
-            ).join(delta_state.select(*keys), keys, "left_semi")
-            merged = merge_ohlc_states(
-                old_touched, delta_state, key_cols=key_cols
-            )
-        else:  # every batch key is brand-new: pure insert
-            merged = delta_state
         # CAS-anchored on the version THIS fold read: a rewrite commit
         # silently retrying at the next version with a stale remove-set
         # would duplicate rows against a racing OPTIMIZE; a conflict
         # instead propagates and Structured Streaming retries the batch
         # from a fresh read
         upsert(
-            spark, merged, state_table, key_cols=keys, txn_id=txn,
-            expect_version=snap.version,
+            spark, delta_state, state_table, key_cols=keys, txn_id=txn,
+            expect_version=snap.version, combine=_combine,
         )
 
     return _fold

@@ -1415,3 +1415,249 @@ def test_apply_changes_sequence_col_named_seq_keeps_watermark(
         for r in read_snapshot(spark, tbl).select("k", "v").collect()
     }
     assert rows[3] == 333  # seq-5 change gated by the stored seq-7
+
+
+def _file_stats(rows: list[tuple], cols: list[str]) -> dict:
+    """Logged-stats shape of one part holding ``rows``: per column
+    [min, max], JSON-safe, as ``_collect_stats`` records them."""
+    from airflow_crypto_btc_spark.sources.snapshot_table import _json_safe
+
+    out = {}
+    for i, c in enumerate(cols):
+        vals = [r[i] for r in rows if r[i] is not None]
+        if vals:
+            out[c] = [_json_safe(min(vals)), _json_safe(max(vals))]
+    out["__nrows"] = len(rows)
+    return out
+
+
+def _per_column_touched(snap, probe_rows, cols, dtypes) -> set[str]:
+    """The per-column definition the one-pass check must never be looser
+    than: per key column, a file is touched when its logged stats cannot
+    rule it out (absent, malformed, of another JSON type than the probe,
+    or an untestable probe dtype) or one probe value lies in its range;
+    the touched set is the intersection over the key columns."""
+    ok_types = {"bigint": int, "string": str, "date": str}
+    out = set(snap.files)
+    for i, c in enumerate(cols):
+        vals = [r[i] for r in probe_rows if r[i] is not None]
+        if dtypes[i] == "date":
+            vals = [v.isoformat() for v in vals]
+        ok = ok_types.get(dtypes[i])
+        keep = set()
+        for f in snap.files:
+            rng = (snap.stats.get(f) or {}).get(c)
+            if (
+                ok is None
+                or not isinstance(rng, list)
+                or len(rng) != 2
+                or not all(
+                    isinstance(x, ok) and not isinstance(x, bool)
+                    for x in rng
+                )
+                or any(rng[0] <= v <= rng[1] for v in vals)
+            ):
+                keep.add(f)
+        out &= keep
+    return out
+
+
+_B = 2**53
+_D = __import__("datetime").date
+_TS = __import__("datetime").datetime
+#: (cols, dtypes, {part: rows}, {part: stats override}, probe rows, want)
+_PRUNE_CASES = {
+    "bigint_above_2_53": (
+        ["k"], ["bigint"],
+        {"p1": [(_B + 1,)], "p2": [(_B + 3,), (_B + 5,)],
+         "p3": [(_B - 10,), (_B - 2,)]},
+        {},
+        [(_B + 1,), (_B + 4,), (_B + 2,)],
+        {"p1", "p2"},
+    ),
+    "string": (
+        ["s"], ["string"],
+        {"p1": [("apple",), ("banana",)], "p2": [("melon",), ("peach",)],
+         "p3": [("Zed",)]},
+        {},
+        [("banana",), ("kiwi",), ("Zed",)],
+        {"p1", "p3"},
+    ),
+    "date": (
+        ["d"], ["date"],
+        {"p1": [(_D(2024, 1, 1),), (_D(2024, 1, 5),)],
+         "p2": [(_D(2024, 2, 1),)]},
+        {},
+        [(_D(2024, 1, 3),)],
+        {"p1"},
+    ),
+    "missing_stats": (
+        ["k"], ["bigint"],
+        {"p1": [(5,)], "p2": [(5,)], "p3": [(100,), (200,)]},
+        {"p1": None, "p2": {"other": [0, 1], "__nrows": 1}},
+        [(5,)],
+        {"p1", "p2"},
+    ),
+    "mistyped_stats": (
+        ["k"], ["bigint"],
+        {"p1": [(5,)], "p2": [(5,)], "p3": [(5,)], "p4": [(100,)],
+         "p5": [(5,)]},
+        {"p1": {"k": ["1", "9"]}, "p2": {"k": [True, True]},
+         "p3": {"k": [1.5, 9.5]}, "p5": {"k": [3]}},
+        [(5,)],
+        {"p1", "p2", "p3", "p5"},
+    ),
+    "two_column_key": (
+        ["et", "d"], ["string", "date"],
+        {"p1": [("a", _D(2024, 1, 1)), ("c", _D(2024, 1, 1))],
+         "p2": [("b", _D(2024, 1, 2))],
+         "p3": [("x", _D(2024, 1, 1))],
+         "p4": [("q", _D(2024, 1, 1))],
+         "p5": [("z", _D(2024, 1, 2))]},
+        {"p4": {"et": ["q", "q"]}, "p5": {"d": ["2024-01-02"] * 2}},
+        [("b", _D(2024, 1, 1)), ("a", _D(2024, 1, 2))],
+        {"p1", "p5"},
+    ),
+    "untestable_column_is_unbounded": (
+        ["et", "ts"], ["string", "timestamp"],
+        {"p1": [("a", _TS(2024, 1, 1))], "p2": [("m", _TS(2024, 1, 2))]},
+        {},
+        [("a", _TS(2024, 3, 1))],
+        {"p1"},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PRUNE_CASES))
+def test_key_range_check_is_a_tight_conservative_superset(spark, case):
+    """On fixed small tables — bigint keys above 2^53, string and date
+    keys, missing and mistyped stats, a two-column key and an untestable
+    key dtype — the one-pass key-range check touches every file that
+    holds a matching key (brute force over the rows) and never more
+    than the per-column intersection."""
+    from airflow_crypto_btc_spark.sources.snapshot_table import (
+        Snapshot,
+        files_overlapping_all_keys,
+    )
+
+    cols, dtypes, parts, overrides, probe_rows, want = _PRUNE_CASES[case]
+    stats = {p: _file_stats(rows, cols) for p, rows in parts.items()}
+    for p, s in overrides.items():
+        if s is None:
+            del stats[p]
+        else:
+            stats[p] = s
+    snap = Snapshot(version=0, files=sorted(parts), stats=stats)
+    probe = spark.createDataFrame(
+        probe_rows, ", ".join(f"{c} {t}" for c, t in zip(cols, dtypes))
+    )
+    touched, carried = files_overlapping_all_keys(spark, snap, probe, cols)
+
+    assert sorted(touched + carried) == snap.files
+    holders = {
+        p for p, rows in parts.items() if set(rows) & set(probe_rows)
+    }
+    assert holders <= set(touched)
+    assert set(touched) <= _per_column_touched(
+        snap, probe_rows, cols, dtypes
+    )
+    assert set(touched) == want
+
+
+def test_key_range_check_ands_columns_per_probe_row(spark):
+    """File A spans et in [a, c] on day d1, file B holds et = b on day
+    d2.  Probing (b, d1) and (a, d2) overlaps both files on each column
+    separately, so the per-column intersection touches both; checked
+    together per probe row only A can hold a match."""
+    from airflow_crypto_btc_spark.sources.snapshot_table import (
+        Snapshot,
+        files_overlapping_all_keys,
+        files_overlapping_keys,
+    )
+
+    d1, d2 = _D(2024, 1, 1), _D(2024, 1, 2)
+    cols = ["et", "d"]
+    snap = Snapshot(
+        version=0,
+        files=["A", "B"],
+        stats={
+            "A": _file_stats([("a", d1), ("c", d1)], cols),
+            "B": _file_stats([("b", d2)], cols),
+        },
+    )
+    probe = spark.createDataFrame(
+        [("b", d1), ("a", d2)], "et string, d date"
+    )
+    per_column = set(snap.files)
+    for c in cols:
+        per_column &= set(
+            files_overlapping_keys(spark, snap, probe.select(c), c)[0]
+        )
+    assert per_column == {"A", "B"}
+    assert files_overlapping_all_keys(spark, snap, probe, cols) == (
+        ["A"],
+        ["B"],
+    )
+
+
+def test_vacuum_single_pass_matches_per_version_definition(
+    tmp_path, monkeypatch
+):
+    """Vacuum's one forward replay dooms exactly the parts the
+    per-version definition does (live at some version, live at none of
+    the last ``keep_versions``) on a randomized history — with parts
+    added and removed in the same entry, removes of dead parts and
+    re-adds — and reads each log file at most once."""
+    import collections
+    import json
+    import random
+    import types
+
+    from airflow_crypto_btc_spark.sources import snapshot_table as st
+
+    rng = random.Random(7)
+    tbl = str(tmp_path / "vac")
+    n = 0
+
+    def fresh() -> str:
+        nonlocal n
+        n += 1
+        os.makedirs(os.path.join(tbl, st._DATA_DIR, f"part-{n:04d}"))
+        return f"part-{n:04d}"
+
+    for _ in range(80):
+        live = current_snapshot(tbl).files
+        add = [fresh() for _ in range(rng.randint(0, 3))]
+        remove = rng.sample(live, rng.randint(0, min(3, len(live))))
+        if rng.random() < 0.2:  # staged and dropped in one entry
+            p = fresh()
+            add.append(p)
+            remove.append(p)
+        if rng.random() < 0.1:  # remove of a part that is not live
+            remove.append(f"part-{rng.randint(1, n):04d}")
+        if rng.random() < 0.1:  # re-add of an earlier part
+            add.append(f"part-{rng.randint(1, n):04d}")
+        commit(tbl, add=add, remove=remove, operation="t")
+
+    versions = st._list_versions(tbl)
+    live_at = {v: set(current_snapshot(tbl, v).files) for v in versions}
+    ever = set().union(*live_at.values())
+    reads: collections.Counter = collections.Counter()
+
+    def counting_load(fh):
+        reads[os.path.basename(fh.name)] += 1
+        return json.load(fh)
+
+    monkeypatch.setattr(
+        st, "json", types.SimpleNamespace(load=counting_load, dump=json.dump)
+    )
+    for keep in (0, 5, 2, 1):
+        kept = set().union(*(live_at[v] for v in versions[-keep:]))
+        reads.clear()
+        assert st.vacuum(tbl, keep_versions=keep) == sorted(ever - kept)
+        assert max(reads.values()) == 1
+        assert len(reads) == len(versions)
+    assert sorted(os.listdir(os.path.join(tbl, st._DATA_DIR))) == sorted(
+        (set(f"part-{i:04d}" for i in range(1, n + 1)) - ever)
+        | live_at[versions[-1]]
+    )

@@ -365,3 +365,64 @@ def test_rollup_maintenance_sink_streaming_fold(spark, tmp_path):
         for r in state_to_ohlc(read_snapshot(spark, state)).collect()
     }
     assert again == want
+
+def _jobs_in(spark, label: str, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"{label}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, label)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: Spark jobs of one steady-state rollup fold into a one-part state:
+#: 1 delta checkpoint, 3 key-range check, 1 schema merge, 7 merge and
+#: write, 2 stats of the new part (the per-column check with a separate
+#: prior-state read launched 34)
+ROLLUP_FOLD_JOB_BUDGET = 14
+
+
+def test_rollup_fold_spark_job_budget(spark, tmp_path):
+    """A steady-state fold into a one-part state launches at most
+    ``ROLLUP_FOLD_JOB_BUDGET`` Spark jobs, and a re-delivered batch id
+    launches none inside the sink callback — per-job overhead cannot
+    creep back into the fold unseen."""
+    import datetime as dt
+
+    from airflow_crypto_btc_spark.sources.snapshot_table import (
+        current_snapshot,
+    )
+    from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+        rollup_maintenance_sink,
+    )
+
+    state = str(tmp_path / "ohlc_state")
+    schema = "event_type string, ts timestamp, value double"
+
+    def batch(seed: int):
+        return spark.createDataFrame(
+            [
+                (et, dt.datetime(2024, 1, 1 + d, h, seed), float(seed + h))
+                for et in ("click", "purchase")
+                for d in range(3)
+                for h in (1, 5 + seed)
+            ],
+            schema,
+        )
+
+    sink = rollup_maintenance_sink(state, "budget")
+    sink(batch(0), 0)  # bootstrap: one part
+    assert len(current_snapshot(state).files) == 1
+    b1 = batch(1)
+    fold = _jobs_in(spark, "rollup-fold", lambda: sink(b1, 1))
+    assert 0 < fold <= ROLLUP_FOLD_JOB_BUDGET, fold
+    v = current_snapshot(state).version
+    b1_again = batch(1)
+    assert _jobs_in(spark, "rollup-replay", lambda: sink(b1_again, 1)) == 0
+    assert current_snapshot(state).version == v
+
