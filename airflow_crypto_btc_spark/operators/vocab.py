@@ -365,14 +365,6 @@ def bpe_train(
     return out
 
 
-def _bpe_apply_merge(syms: list[str], l: str, r: str) -> list[str]:
-    """Canonical greedy left-to-right merge of one pair in a symbol
-    list: each match consumes both symbols (the merged token never
-    re-pairs within the same step) — exactly the semantics of the
-    marker-encoded string replace both engines run."""
-    return _bpe_merge_deltas(syms, l, r)[0]
-
-
 def _bpe_merge_deltas(
     syms: list[str], l: str, r: str
 ) -> tuple[list[str], dict[tuple[str, str], int]]:

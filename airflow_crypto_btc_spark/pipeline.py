@@ -248,30 +248,6 @@ def fetch_klines_http(
     raise RuntimeError(f"klines fetch failed after {attempts}") from last_err
 
 
-def extract_day_from_events(
-    spark: SparkSession,
-    sf_dir: str,
-    day: str,
-    event_type: str = "purchase",
-) -> DataFrame:
-    """Fixture-backed stand-in for the HTTP source (SURVEY §2.1 S1 note):
-    the ``events`` table's ``(ts, value)`` plays the klines ``(ts, price)``
-    role; ``event_type`` plays the symbol."""
-    from airflow_crypto_btc_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.filter(F.col("event_type") == event_type)
-        .filter(F.to_date("ts") == F.lit(day).cast("date"))
-        .select(
-            F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("ts_utc"),
-            F.col("value").alias("price"),
-        )
-        .transform(lambda d: dedup_keep_first(d, ["ts_utc"], "ts_utc"))
-        .orderBy("ts_utc")
-    )
-
-
 # ------------------------------------------------------------------ stages 1-6
 
 

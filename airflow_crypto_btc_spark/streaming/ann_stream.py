@@ -49,40 +49,28 @@ from airflow_crypto_btc_spark.operators.similarity import (
     hyperplane_bucket_expr,
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     read_snapshot_or_none,
-    vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    SourcePin,
+    cas_guard,
+    compact_tables,
+    fold_sink,
+    maintenance_due,
+    new_rows,
+    snapshot_rows,
 )
 
 
-def _fresh_rows(batch_df, id_col: str, vec_col: str, committed, seen_id_col: str):
-    """Shared per-batch front end of the vector sinks: deterministic
-    within-batch dedup (min md5 of the stringified vector per id — a
-    crash replay picks the same representative) followed by the
-    insert-only anti-join against the committed table's ids.  One
-    definition, two sinks: replay semantics must never diverge between
-    the ANN index stream and the PQ codes stream."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(
-        F.md5(F.concat_ws(",", F.transform(
-            F.col(vec_col), lambda x: x.cast("string")
-        )))
-    )
-    fresh = (
-        batch_df.withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .drop("_rn")
-    )
-    if committed is not None:
-        fresh = fresh.join(
-            committed.select(F.col(seen_id_col).alias("_seen")),
-            fresh[id_col] == F.col("_seen"),
-            "left_anti",
-        )
-    return fresh
+def vector_order(vec_col: str):
+    """Within-batch dedup order of the vector sinks: md5 of the
+    stringified vector, so a crash replay picks the same representative
+    per id.  One definition for the ANN index, PQ codes, IVF-PQ and
+    semantic streams — their replay semantics must never diverge."""
+    return F.md5(F.concat_ws(",", F.transform(
+        F.col(vec_col), lambda x: x.cast("string")
+    )))
 
 
 def embedding_index_sink(
@@ -151,7 +139,9 @@ def embedding_index_sink(
             )
         else:
             committed = read_snapshot_or_none(spark, index_table)
-        fresh = _fresh_rows(batch_df, id_col, vec_col, committed, "nid")
+        fresh = new_rows(
+            batch_df, id_col, vector_order(vec_col), committed, "nid"
+        )
         batch_rows = (
             fresh.select(
                 F.col(id_col).alias("nid"),
@@ -232,43 +222,24 @@ def embedding_index_sink(
         # function of (batch, pre-fold index) and therefore replays
         # identically via the time-travel branch above
         if folded_v is None:
-            try:
+            with cas_guard():
                 append(
                     spark, batch_rows, index_table,
                     txn_id=index_txn,
                     expect_version=index_v,
                 )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
         append(
             spark, pairs, pairs_table,
             txn_id=f"{query_name}:{batch_id}:pairs",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (index_table, pairs_table):
-                # the index rewrite bnum-CLUSTERS so the compacted parts
-                # stay range-aligned and probe pruning keeps skipping
-                # files as the stream grows (skip for a pre-bnum
-                # generation — nulls cannot z-order).  Snapshot may be
-                # None (e.g. an all-quarantined batch never appended):
-                # skip the table rather than dereference None.
-                snap = read_snapshot_or_none(spark, table)
-                if snap is None:
-                    continue
-                cluster = (
-                    ["bnum"]
-                    if table == index_table and "bnum" in snap.columns
-                    else None
-                )
-                try:
-                    compact(
-                        spark, table,
-                        target_parts=compact_target_parts,
-                        cluster_by=cluster,
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        if maintenance_due(compact_every, batch_id):
+            # the index rewrite bnum-CLUSTERS so the compacted parts
+            # stay range-aligned and probe pruning keeps skipping files
+            # as the stream grows
+            compact_tables(
+                spark, [index_table, pairs_table], compact_target_parts,
+                cluster_by={index_table: ["bnum"]},
+            )
 
     return _fold
 
@@ -293,73 +264,39 @@ def pq_codes_sink(
     corrupt every ADC comparison, which is exactly what the version pin
     refuses.
 
-    Replay safety: within-batch dedup is deterministic, already-encoded
-    ids anti-join away against the committed codes, and the single
-    append per batch is txn-id idempotent."""
+    Replay safety: the ``snapshot_sink.fold_sink`` skeleton —
+    already-encoded ids anti-join away against the committed codes and
+    the single append per batch is exactly-once."""
     import os
-
-    from pyspark.sql import Window
 
     from airflow_crypto_btc_spark.operators.similarity import (
         pq_encode,
         pq_load_codebooks,
     )
-    from airflow_crypto_btc_spark.sources.snapshot_table import (
-        current_snapshot,
-    )
 
     books_t = os.path.join(index_root, "books")
     codes_t = os.path.join(index_root, "codes")
-    books_snap = current_snapshot(books_t)
-    meta = books_snap.meta
-    if expect_source is not None and meta.get("source_version") != expect_source:
-        raise ValueError(
-            f"stale PQ codebooks: built from "
-            f"{meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — retrain before streaming codes"
-        )
-
+    books_pin = SourcePin(books_t, "PQ codebooks", expect_source)
     books_cache = {}
 
-    def _fold(batch_df, batch_id: int) -> None:
+    def _delta(batch_df, snap):
+        books_pin.check()
         spark = batch_df.sparkSession
-        # frozen-model contract: books load ONCE (first batch) and every
-        # later batch asserts the books table is still the SAME COMMIT —
-        # by VERSION, not meta: a rebuild with identical meta (same
-        # corpus tag, retrained books) bumps the version and must stop
-        # the stream rather than silently mix codebook generations
-        if current_snapshot(books_t).version != books_snap.version:
-            raise ValueError(
-                "PQ codebooks changed under a running codes stream — "
-                "restart the sink against the new generation"
-            )
-        if "books" not in books_cache:
+        if "books" not in books_cache:  # loaded once, on the first batch
             books_cache["books"] = pq_load_codebooks(spark, books_t)
-        books = books_cache["books"]
-        # CAS anchor: the codes version the dedup anti-join is based on
-        # (round-9 closure, same as every other maintainer)
-        codes_v = current_snapshot(codes_t).version
-        committed = read_snapshot_or_none(spark, codes_t)
-        fresh = _fresh_rows(batch_df, id_col, vec_col, committed, "nid")
-        try:
-            append(
-                spark,
-                pq_encode(fresh, books, id_col, vec_col),
-                codes_t,
-                txn_id=f"{query_name}:{batch_id}",
-                meta=meta,
-                expect_version=codes_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(spark, codes_t, target_parts=compact_target_parts)
-            except ValueError:
-                return
-            vacuum(codes_t)
+        fresh = new_rows(
+            batch_df, id_col, vector_order(vec_col),
+            snapshot_rows(spark, codes_t, snap), "nid",
+        )
+        return pq_encode(fresh, books_cache["books"], id_col, vec_col)
 
-    return _fold
+    return fold_sink(
+        codes_t, query_name, _delta, meta=books_pin.snap.meta,
+        every=compact_every,
+        maintain=lambda spark: compact_tables(
+            spark, [codes_t], compact_target_parts
+        ),
+    )
 
 
 def ivfpq_arrivals_sink(
@@ -426,34 +363,16 @@ def ivfpq_arrivals_sink(
             "rebuild, rebuild all four before streaming arrivals"
         )
     meta = metas["books"]
-    if (
-        expect_source is not None
-        and meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale IVF-PQ index: built from "
-            f"{meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming arrivals"
-        )
-    books_snap = current_snapshot(parts["books"])
-    cent_snap = current_snapshot(parts["centroids"])
+    pins = [
+        SourcePin(parts["books"], "IVF-PQ index", expect_source),
+        SourcePin(parts["centroids"], "IVF-PQ centroids"),
+    ]
     cache: dict = {}
 
     def _fold(batch_df, batch_id: int) -> None:
+        for pin in pins:
+            pin.check()
         spark = batch_df.sparkSession
-        if current_snapshot(parts["books"]).version != books_snap.version:
-            raise ValueError(
-                "PQ codebooks changed under a running IVF-PQ stream — "
-                "restart the sink against the new generation"
-            )
-        if (
-            current_snapshot(parts["centroids"]).version
-            != cent_snap.version
-        ):
-            raise ValueError(
-                "coarse centroids changed under a running IVF-PQ "
-                "stream — restart the sink against the new generation"
-            )
         if "books" not in cache:
             cache["books"] = pq_load_codebooks(spark, parts["books"])
         books = cache["books"]
@@ -462,8 +381,10 @@ def ivfpq_arrivals_sink(
         # append are based on
         codes_v = current_snapshot(parts["codes"]).version
         lists_v = current_snapshot(parts["lists"]).version
-        committed = read_snapshot_or_none(spark, parts["lists"])
-        fresh = _fresh_rows(batch_df, id_col, vec_col, committed, "nid")
+        fresh = new_rows(
+            batch_df, id_col, vector_order(vec_col),
+            read_snapshot_or_none(spark, parts["lists"]), "nid",
+        )
         # the round-9 width channel: the batch frame is derived (window
         # + anti-join), so stamp the dim known from the codebooks — the
         # assignment kernels go unrolled with zero probes
@@ -487,7 +408,7 @@ def ivfpq_arrivals_sink(
                 "maintenance — a second writer is sharing this index; "
                 "retry the batch"
             )
-        try:
+        with cas_guard():
             append(
                 spark, codes_new, parts["codes"],
                 txn_id=f"{query_name}:{batch_id}:codes",
@@ -498,14 +419,10 @@ def ivfpq_arrivals_sink(
                 txn_id=f"{query_name}:{batch_id}:lists",
                 meta=meta, expect_version=lists_v,
             )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for t in (parts["codes"], parts["lists"]):
-                try:
-                    compact(spark, t, target_parts=compact_target_parts)
-                except ValueError:
-                    continue
-                vacuum(t)
+        if maintenance_due(compact_every, batch_id):
+            compact_tables(
+                spark, [parts["codes"], parts["lists"]],
+                compact_target_parts,
+            )
 
     return _fold

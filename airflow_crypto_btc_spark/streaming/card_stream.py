@@ -12,11 +12,12 @@ rows, not O(corpus bytes), and exact-duplicate accounting needs no
 transition bookkeeping because the rollup always sees every digest's
 full multiplicity.
 
-Per batch: deterministic within-batch dedup, already-ingested ids
-anti-join away (re-delivery; append-ignore semantics — a mutated body
-under a seen id is NOT re-scored, same contract as the S5 sink), one
-txn-id idempotent append.  Periodic compaction keeps the facts table's
-file count bounded under long streams.
+Per batch, through the ``snapshot_sink.fold_sink`` skeleton:
+already-ingested ids anti-join away (append-ignore semantics — a
+mutated body under a seen id is NOT re-scored, same contract as the S5
+sink) and the survivors' facts append exactly once.  Periodic
+compaction keeps the facts table's file count bounded under long
+streams.
 
 The reference has no streaming surface; this extends its report family
 (SURVEY §2.1 S9's daily summary shape) to the Structured-Streaming
@@ -25,24 +26,19 @@ execution model.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.operators.curation import (
     card_facts,
     card_from_facts,
 )
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
-from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
-    append,
-    compact,
-    current_snapshot,
-    read_snapshot,
-    read_snapshot_or_none,
-    vacuum,
+from airflow_crypto_btc_spark.sources.snapshot_table import read_snapshot
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    compact_tables,
+    fold_sink,
+    new_rows,
+    snapshot_rows,
 )
 
 
@@ -57,47 +53,19 @@ def card_facts_sink(
     """``foreachBatch`` callback appending each arriving document's card
     facts exactly once."""
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # CAS anchor: the facts version the dedup anti-join is based on
-        # (same closure as maintain_ohlc_rollup — the commit lands only
-        # if no other writer advanced the table between our read and our
-        # commit, so a racing fold can never double-ingest a doc id)
-        facts_v = current_snapshot(facts_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+    def _delta(batch_df: DataFrame, snap) -> DataFrame:
+        fresh = new_rows(
+            batch_df, id_col, F.md5(F.col(text_col)),
+            snapshot_rows(batch_df.sparkSession, facts_table, snap),
         )
-        committed = read_snapshot_or_none(spark, facts_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
-        try:
-            append(
-                spark,
-                card_facts(fresh, text_col, id_col),
-                facts_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=facts_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, facts_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(facts_table)
+        return card_facts(fresh, text_col, id_col)
 
-    return _fold
+    return fold_sink(
+        facts_table, query_name, _delta, every=compact_every,
+        maintain=lambda spark: compact_tables(
+            spark, [facts_table], compact_target_parts
+        ),
+    )
 
 
 def data_card_from_facts_table(

@@ -50,25 +50,26 @@ Structured-Streaming execution model.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.operators.dedup import (
     minhash_lsh_pairs_from_index,
 )
 from airflow_crypto_btc_spark.operators.dedup_fast import minhash_prep_fast
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
     read_snapshot,
     read_snapshot_or_none,
     txn_version,
-    vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    cas_guard,
+    compact_tables,
+    drop_committed,
+    first_per,
+    fold_sink,
+    maintenance_due,
 )
 
 
@@ -115,12 +116,7 @@ def near_dup_index_sink(
         # hash per id), so a crash replay picks the same representative
         # the committed pairs were computed from — dropDuplicates'
         # arbitrary pick could disagree across attempts.
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
+        fresh = first_per(batch_df, id_col, F.md5(F.col(text_col)))
         # Freshness is keyed off the LAST-committed index table (bands):
         # ids already indexed — upstream re-delivery from an
         # at-least-once source — are dropped before anything else, so
@@ -188,11 +184,7 @@ def near_dup_index_sink(
                         "digest_indexed",
                     )
                 )
-            fresh = fresh.join(
-                committed_bands.select(F.col("id").alias("_indexed_id")),
-                fresh[id_col] == F.col("_indexed_id"),
-                "left_anti",
-            )
+            fresh = drop_committed(fresh, committed_bands, id_col, "id")
         prep = minhash_prep_fast(
             fresh, id_col, text_col, k_shingle, num_hashes, bands
         ).localCheckpoint(eager=False)  # one Arrow scan feeds everything
@@ -259,7 +251,7 @@ def near_dup_index_sink(
         # downstream frame recomputes identically and each append skips
         # or lands exactly once via its txn id.
         sets_cas_v = current_snapshot(sets_table).version
-        try:
+        with cas_guard():
             if folded_v is None:
                 append(
                     spark, batch_bands, bands_table,
@@ -271,8 +263,6 @@ def near_dup_index_sink(
                 txn_id=f"{query_name}:{batch_id}:sets",
                 expect_version=sets_cas_v,
             )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
         append(
             spark, pairs, pairs_table,
             txn_id=f"{query_name}:{batch_id}:pairs",
@@ -283,30 +273,17 @@ def near_dup_index_sink(
                 spark, conflicts, conflicts_table,
                 txn_id=f"{query_name}:{batch_id}:conflicts",
             )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            maintained = [sets_table, pairs_table, bands_table]
-            if conflicts_table is not None:
-                maintained.append(conflicts_table)
-            for table in maintained:
-                # the bands rewrite bkn-CLUSTERS so compacted parts stay
-                # range-aligned and probe file-pruning keeps skipping as
-                # the stream grows (skip for a pre-bkn generation —
-                # nulls cannot z-order; None-guard: a table appended
-                # this batch can still be log-empty on replay shapes)
-                cluster = None
-                if table == bands_table:
-                    snap = read_snapshot_or_none(spark, table)
-                    if snap is not None and "bkn" in snap.columns:
-                        cluster = ["bkn"]
-                try:
-                    compact(
-                        spark, table,
-                        target_parts=compact_target_parts,
-                        cluster_by=cluster,
-                    )
-                except ValueError:
-                    continue  # table still empty (e.g. no pairs yet)
-                vacuum(table)
+        if maintenance_due(compact_every, batch_id):
+            # the bands rewrite bkn-CLUSTERS so compacted parts stay
+            # range-aligned and probe file-pruning keeps skipping as the
+            # stream grows
+            compact_tables(
+                spark,
+                [sets_table, pairs_table, bands_table]
+                + ([conflicts_table] if conflicts_table else []),
+                compact_target_parts,
+                cluster_by={bands_table: ["bkn"]},
+            )
 
     return _fold
 
@@ -343,18 +320,15 @@ def contamination_guard_sink(
         eval_docs, id_col, text_col, shingle_k
     ).localCheckpoint(eager=True)
 
-    def _check(batch_df, batch_id: int) -> None:
-        flagged = contamination_pairs(
+    return fold_sink(
+        flags_table, query_name,
+        lambda batch_df, snap: contamination_pairs(
             batch_df,
             id_col=id_col,
             text_col=text_col,
             shingle_k=shingle_k,
             min_containment=min_containment,
             test_sh=test_sh,
-        )
-        append(
-            batch_df.sparkSession, flagged, flags_table,
-            txn_id=f"{query_name}:{batch_id}",
-        )
-
-    return _check
+        ),
+        cas=False,
+    )

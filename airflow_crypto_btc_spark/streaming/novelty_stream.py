@@ -42,22 +42,22 @@ the per-batch digests read never decays into a small-files scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
     overwrite,
     read_snapshot_or_none,
     snapshot_changes,
     txn_version,
     vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    cas_guard,
+    compact_tables,
+    first_per,
+    maintenance_due,
 )
 
 
@@ -92,10 +92,8 @@ def novelty_sink(
         prepped = _digest_cols(batch_df, text_col).withColumn(
             "digest", _digest_expr(text_col)
         )
-        w = Window.partitionBy("digest").orderBy(F.col(id_col))
         batch = (
-            prepped.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
+            first_per(prepped, "digest", F.col(id_col))
             .select(F.col(id_col).alias("id"), "digest", "_h1", "_h2")
             .localCheckpoint(eager=False)
         )
@@ -163,14 +161,12 @@ def novelty_sink(
                 )
             # digests FIRST (the CAS-serialized fold — see module
             # docstring), then the output rows, then the bitmap
-            try:
+            with cas_guard():
                 append(
                     spark, novel.select("digest"), digests_table,
                     txn_id=digests_txn,
                     expect_version=digests_v,
                 )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
             append(
                 spark, novel.select("id", "digest"), novel_table,
                 txn_id=f"{query_name}:{batch_id}:novel",
@@ -185,7 +181,7 @@ def novelty_sink(
                 delta_bm = delta_bm | np.frombuffer(
                     bitmap_b, dtype=np.uint8
                 )
-            try:
+            with cas_guard():
                 overwrite(
                     spark,
                     spark.createDataFrame(
@@ -195,8 +191,6 @@ def novelty_sink(
                     meta={"n_bits": n_bits, "k": k},
                     expect_version=bloom_v,
                 )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
             # every overwrite de-references the previous bitmap part but
             # leaves it on disk; without this an N-batch run accumulates
             # N dead copies of the (fixed-size) state
@@ -208,14 +202,9 @@ def novelty_sink(
                 # append); on the failure path the batch is replayed
                 # from scratch — either way the blocks are dead here
                 bitmap_bc.unpersist()
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (digests_table, novel_table):
-                try:
-                    compact(
-                        spark, table, target_parts=compact_target_parts
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        if maintenance_due(compact_every, batch_id):
+            compact_tables(
+                spark, [digests_table, novel_table], compact_target_parts
+            )
 
     return _fold

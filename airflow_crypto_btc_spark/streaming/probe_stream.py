@@ -14,13 +14,13 @@ stops it rather than silently mixing scoring regimes (the same doctrine
 as ``text_stream.quality_scores_sink`` and ``semantic_stream``'s frozen
 quantizer).
 
-Per batch: deterministic within-batch dedup, already-decided ids
-anti-join away (re-delivery), survivors score via one broadcast
+Per batch (the ``snapshot_sink.fold_sink`` skeleton): already-decided
+ids anti-join away (re-delivery), survivors score via one broadcast
 weight-array cross join — a row-local integer expression, no exchange
-beyond the batch's own rows — and the single append is txn-id
-idempotent.  The gate decision lands WITH its evidence
-(``score_micro``), so downstream consumers filter without re-scoring
-and an audit can always ask "why was this dropped".
+beyond the batch's own rows — and land in one exactly-once append.
+The gate decision lands WITH its evidence (``score_micro``), so
+downstream consumers filter without re-scoring and an audit can always
+ask "why was this dropped".
 
 The reference has no streaming surface; this extends the curation
 family (SURVEY §2 extension) to the Structured-Streaming execution
@@ -29,24 +29,19 @@ model.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.probe import (
     quality_probe_scores,
     weights_from_model_rows,
 )
-from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
-    append,
-    compact,
-    current_snapshot,
-    read_snapshot,
-    read_snapshot_or_none,
-    vacuum,
+from airflow_crypto_btc_spark.sources.snapshot_table import read_snapshot
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    SourcePin,
+    compact_tables,
+    fold_sink,
+    new_rows,
+    snapshot_rows,
 )
 
 
@@ -71,50 +66,21 @@ def probe_gate_sink(
     Arrivals carry no label (that is the point of the gate), so scoring
     goes through the weight array directly rather than
     ``quality_probe_scores_from_model``'s labeled-evaluation shape."""
+    model = SourcePin(model_table, "probe model", expect_source)
 
-    model_snap = current_snapshot(model_table)
-    if (
-        expect_source is not None
-        and model_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale probe model: built from "
-            f"{model_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming the gate"
-        )
-
-    def _fold(batch_df, batch_id: int) -> None:
+    def _delta(batch_df, snap):
+        model.check()
         spark = batch_df.sparkSession
-        if current_snapshot(model_table).version != model_snap.version:
-            raise ValueError(
-                "probe model changed under a running gate stream — "
-                "restart the sink against the new generation (scores "
-                "from different weight generations are not comparable)"
-            )
-        # CAS anchor: the decisions version the dedup anti-join is based
-        # on (round-9 closure, same as every other maintainer)
-        decisions_v = current_snapshot(decisions_table).version
-        w = Window.partitionBy(id_col).orderBy(
-            F.md5(F.to_json(F.struct(vec_col)))
+        fresh = new_rows(
+            batch_df, id_col, F.md5(F.to_json(F.struct(vec_col))),
+            snapshot_rows(spark, decisions_table, snap),
         )
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
-        committed = read_snapshot_or_none(spark, decisions_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
         weights = weights_from_model_rows(
             read_snapshot(spark, model_table).select("pos", "w_micro")
         )
         # label-free scoring: reuse the batch scorer with a dummy label,
         # then keep only the gate-relevant columns
-        scores = quality_probe_scores(
+        return quality_probe_scores(
             fresh.withColumn("_y", F.lit(0)),
             weights,
             id_col=id_col,
@@ -128,22 +94,10 @@ def probe_gate_sink(
                 "passed"
             ),
         )
-        try:
-            append(
-                spark, scores, decisions_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=decisions_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, decisions_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(decisions_table)
 
-    return _fold
+    return fold_sink(
+        decisions_table, query_name, _delta, every=compact_every,
+        maintain=lambda spark: compact_tables(
+            spark, [decisions_table], compact_target_parts
+        ),
+    )

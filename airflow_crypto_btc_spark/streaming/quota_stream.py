@@ -62,14 +62,18 @@ from airflow_crypto_btc_spark.operators.incremental import (
     ConcurrentMaintenanceError,
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
     read_snapshot_or_none,
     txn_meta,
     upsert,
     vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    cas_guard,
+    compact_tables,
+    maintenance_due,
+    new_rows,
 )
 
 
@@ -110,20 +114,11 @@ def domain_quota_sink(
         spark = batch_df.sparkSession
         counts_txn = f"{query_name}:{batch_id}:counts"
 
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(domain_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
         ids_v = current_snapshot(ids_table).version
-        seen = read_snapshot_or_none(spark, ids_table)
-        if seen is not None:
-            fresh = fresh.join(
-                seen.select(F.col("id").alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
+        fresh = new_rows(
+            batch_df, id_col, F.md5(F.col(domain_col)),
+            read_snapshot_or_none(spark, ids_table), "id",
+        )
         # NULL domains group as ONE domain under an internal coalesced
         # key (same doctrine as operators/curation.domain_quota): a null
         # key would match nothing in the counts join and its rank would
@@ -218,7 +213,7 @@ def domain_quota_sink(
                     "quota gating — a second writer is sharing these "
                     "tables; retry the batch"
                 )
-            try:
+            with cas_guard():
                 if counts is None:  # bootstrap: first write creates it
                     append(
                         spark, new_counts, counts_table,
@@ -233,8 +228,6 @@ def domain_quota_sink(
                         expect_version=counts_v,
                         meta={"priors": priors, "batch": batch_id},
                     )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
         append(
             spark, decided.drop("_dom", "_prior"), decisions_table,
             txn_id=f"{query_name}:{batch_id}:decisions",
@@ -245,15 +238,10 @@ def domain_quota_sink(
             ids_table,
             txn_id=f"{query_name}:{batch_id}:ids",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (decisions_table, ids_table):
-                try:
-                    compact(
-                        spark, table, target_parts=compact_target_parts
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        if maintenance_due(compact_every, batch_id):
+            compact_tables(
+                spark, [decisions_table, ids_table], compact_target_parts
+            )
             vacuum(counts_table)  # upserts are rewrites: drop old gens
 
     return _gate

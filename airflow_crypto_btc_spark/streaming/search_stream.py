@@ -33,22 +33,20 @@ file-prune as the stream grows).
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.search import doc_lengths, postings
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
     read_snapshot,
-    read_snapshot_or_none,
     txn_version,
-    vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    cas_guard,
+    compact_tables,
+    maintenance_due,
+    new_rows,
 )
 
 
@@ -68,12 +66,6 @@ def bm25_index_sink(
 
     def _fold(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
         dlen_txn = f"{query_name}:{batch_id}:doclen"
         folded_v = txn_version(doclen_table, dlen_txn)
         # CAS anchor FIRST, then the registry read pinned AT the anchor
@@ -92,15 +84,9 @@ def bm25_index_sink(
             registry = read_snapshot(spark, doclen_table, version=cas_v)
         else:
             registry = None
-        if registry is not None:
-            fresh = fresh.join(
-                registry.select(F.col("doc_id").alias("_indexed_id")),
-                fresh[id_col] == F.col("_indexed_id"),
-                "left_anti",
-            )
-        fresh = fresh.localCheckpoint(
-            eager=False
-        )  # one freshness anti-join feeds both appends
+        fresh = new_rows(
+            batch_df, id_col, F.md5(F.col(text_col)), registry, "doc_id"
+        ).localCheckpoint(eager=False)  # one anti-join feeds both appends
         batch_dlen = doc_lengths(fresh, id_col, text_col)
         batch_post = postings(fresh, id_col, text_col).withColumn(
             # serve-time joins prune files by token: cluster key for the
@@ -108,8 +94,8 @@ def bm25_index_sink(
             "tkn",
             F.xxhash64("token"),
         )
-        try:
-            if folded_v is None:
+        if folded_v is None:
+            with cas_guard():
                 append(
                     spark,
                     batch_dlen,
@@ -117,30 +103,16 @@ def bm25_index_sink(
                     txn_id=dlen_txn,
                     expect_version=cas_v,
                 )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
         append(
             spark,
             batch_post,
             postings_table,
             txn_id=f"{query_name}:{batch_id}:postings",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table, cluster in (
-                (doclen_table, None),
-                (postings_table, ["tkn"]),
-            ):
-                snap = read_snapshot_or_none(spark, table)
-                if snap is None:
-                    continue
-                if cluster and not set(cluster) <= set(snap.columns):
-                    cluster = None  # pre-tkn generation unions as nulls
-                compact(
-                    spark,
-                    table,
-                    target_parts=compact_target_parts,
-                    cluster_by=cluster,
-                )
-                vacuum(table)
+        if maintenance_due(compact_every, batch_id):
+            compact_tables(
+                spark, [doclen_table, postings_table], compact_target_parts,
+                cluster_by={postings_table: ["tkn"]},
+            )
 
     return _fold

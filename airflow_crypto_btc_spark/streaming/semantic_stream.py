@@ -11,10 +11,10 @@ The batch-side architecture (``build_semantic_index`` →
 exact under a FROZEN quantizer and append-only ids.  This module runs
 the Δ side per micro-batch:
 
-1. the centroids table is loaded once at sink construction and
-   version-asserted every batch — a rebuild under a running stream must
-   stop it, never silently re-cluster (same frozen-model doctrine as
-   ``ann_stream.pq_codes_sink``);
+1. the centroids table is pinned at sink construction and
+   version-asserted every batch (``snapshot_sink.SourcePin``) — a
+   rebuild under a running stream must stop it, never silently
+   re-cluster;
 2. within-batch duplicates resolve deterministically and already-indexed
    ids anti-join away (re-delivery from an at-least-once source);
 3. ids arriving BELOW the committed high-water mark would invalidate
@@ -41,18 +41,19 @@ from airflow_crypto_btc_spark.operators.similarity import (
     semantic_purge_delta,
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
     read_snapshot,
     read_snapshot_or_none,
     txn_version,
-    vacuum,
 )
-from airflow_crypto_btc_spark.streaming.ann_stream import (
-    ConcurrentMaintenanceError,
-    _fresh_rows,
+from airflow_crypto_btc_spark.streaming.ann_stream import vector_order
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    SourcePin,
+    cas_guard,
+    compact_tables,
+    maintenance_due,
+    new_rows,
 )
 
 
@@ -93,26 +94,14 @@ def semantic_index_sink(
     serving artifact stays complete; audit with
     ``similarity.semantic_purge_skipped_clusters``."""
 
-    cent_snap = current_snapshot(centroids_table)
-    if (
-        expect_source is not None
-        and cent_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale semantic quantizer: built from "
-            f"{cent_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming"
-        )
-
+    quantizer = SourcePin(
+        centroids_table, "semantic quantizer", expect_source
+    )
     state: dict = {}  # frozen centroids frame, loaded on first batch
 
     def _fold(batch_df, batch_id: int) -> None:
+        quantizer.check()
         spark = batch_df.sparkSession
-        if current_snapshot(centroids_table).version != cent_snap.version:
-            raise ValueError(
-                "semantic quantizer changed under a running stream — "
-                "restart the sink against the new generation"
-            )
         if "cent" not in state:
             state["cent"] = read_snapshot(spark, centroids_table)
         members_txn = f"{query_name}:{batch_id}:members"
@@ -137,8 +126,8 @@ def semantic_index_sink(
         # high-water check, the labeling, the member rows, and the
         # batch-max aggregate — cut it once instead of recomputing the
         # window per consumer
-        fresh = _fresh_rows(
-            batch_df, id_col, vec_col, committed, "id"
+        fresh = new_rows(
+            batch_df, id_col, vector_order(vec_col), committed, "id"
         ).localCheckpoint(eager=False)
         # High-water-mark check: one metadata scalar vs one batch-sized
         # aggregation — never a scan of the members table.  The mark
@@ -211,20 +200,18 @@ def semantic_index_sink(
         # replays to identical content with the earlier commits
         # skipping via their txn ids
         if folded_v is None:
-            try:
+            with cas_guard():
                 append(
                     spark, batch_members, members_table,
                     txn_id=members_txn,
                     expect_version=members_v,
                     meta={
-                        **cent_snap.meta,
+                        **quantizer.snap.meta,
                         "max_id": (
                             None if new_max is None else int(new_max)
                         ),
                     },
                 )
-            except CommitConflictError as exc:
-                raise ConcurrentMaintenanceError(str(exc)) from exc
         if late_rows is not None:
             append(
                 spark, late_rows, quarantine_table,
@@ -234,22 +221,13 @@ def semantic_index_sink(
             spark, labeling, labels_table,
             txn_id=f"{query_name}:{batch_id}:labels",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (members_table, labels_table):
-                try:
-                    compact(
-                        spark, table,
-                        target_parts=compact_target_parts,
-                        # cid-cluster the members rewrite: the compacted
-                        # parts stay range-aligned so IVF probe pruning
-                        # (ivf_topk_from_tables) keeps skipping files as
-                        # the stream grows
-                        cluster_by=(
-                            ["cid"] if table == members_table else None
-                        ),
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        if maintenance_due(compact_every, batch_id):
+            # cid-cluster the members rewrite: the compacted parts stay
+            # range-aligned so IVF probe pruning (ivf_topk_from_tables)
+            # keeps skipping files as the stream grows
+            compact_tables(
+                spark, [members_table, labels_table], compact_target_parts,
+                cluster_by={members_table: ["cid"]},
+            )
 
     return _fold

@@ -9,17 +9,16 @@ and frozen — re-planning per micro-batch would move already-assigned
 documents between shards as the observed token distribution drifts
 (a shard assignment, like a quality score, must not change because
 unrelated documents arrived).  The map is loaded once at sink
-construction, version-asserted every batch: a rebuild under a running
-stream stops the sink rather than silently splitting the corpus across
-two shard plans (the same doctrine as ``probe_stream`` /
-``text_stream`` / ``semantic_stream``).
+construction, version-asserted every batch (``snapshot_sink.SourcePin``):
+a rebuild under a running stream stops the sink rather than silently
+splitting the corpus across two shard plans.
 
-Per batch: deterministic within-batch dedup, already-assigned ids
-anti-join away (re-delivery), survivors assign via one broadcast join
-on the bounded map — no census, no window, no exchange beyond the
-batch's own rows — and the single append is txn-id idempotent.  The
-assignment lands WITH its evidence (``n_tokens``, ``micro_shard``), so
-a balance audit over the decisions table needs no re-tokenization.
+Per batch (the ``snapshot_sink.fold_sink`` skeleton): already-assigned
+ids anti-join away (re-delivery), survivors assign via one broadcast
+join on the bounded map — no census, no exchange beyond the batch's
+own rows — and land in one exactly-once append.  The assignment lands
+WITH its evidence (``n_tokens``, ``micro_shard``), so a balance audit
+over the decisions table needs no re-tokenization.
 
 The reference has no streaming surface; this extends the curation
 family (SURVEY §2 extension) to the Structured-Streaming execution
@@ -28,20 +27,15 @@ model.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
-from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
-    append,
-    compact,
-    current_snapshot,
-    read_snapshot,
-    read_snapshot_or_none,
-    vacuum,
+from airflow_crypto_btc_spark.sources.snapshot_table import read_snapshot
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    SourcePin,
+    compact_tables,
+    fold_sink,
+    new_rows,
+    snapshot_rows,
 )
 
 
@@ -65,47 +59,21 @@ def shard_assignments_sink(
     path whose behavior could diverge from the batch operator."""
     from airflow_crypto_btc_spark.functions.hashing import tokens_expr
 
-    map_snap = current_snapshot(map_table)
-    if (
-        expect_source is not None
-        and map_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale shard map: planned on "
-            f"{map_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming assignments"
-        )
-    m = int(map_snap.meta["shards"]) * int(map_snap.meta["oversample"])
+    shard_map = SourcePin(map_table, "shard map", expect_source)
+    meta = shard_map.snap.meta
+    m = int(meta["shards"]) * int(meta["oversample"])
 
-    def _fold(batch_df, batch_id: int) -> None:
+    def _delta(batch_df, snap):
+        shard_map.check()
         spark = batch_df.sparkSession
-        if current_snapshot(map_table).version != map_snap.version:
-            raise ValueError(
-                "shard map changed under a running assignment stream — "
-                "restart the sink against the new generation (documents "
-                "assigned under different plans would split the corpus)"
-            )
-        # CAS anchor: the assignments version the dedup anti-join is
-        # based on — a racing fold can never double-assign an id (the
-        # map-version assert above stays as the cross-table fast-fail)
-        assignments_v = current_snapshot(assignments_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+        fresh = new_rows(
+            batch_df, id_col, F.md5(F.col(text_col)),
+            snapshot_rows(spark, assignments_table, snap),
         )
-        committed = read_snapshot_or_none(spark, assignments_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
         mapping = read_snapshot(spark, map_table).select(
             "micro_shard", "shard"
         )
-        assigned = (
+        return (
             fresh.select(
                 F.col(id_col),
                 F.expr(
@@ -119,22 +87,10 @@ def shard_assignments_sink(
             .join(F.broadcast(mapping), "micro_shard")
             .select(id_col, "n_tokens", "micro_shard", "shard")
         )
-        try:
-            append(
-                spark, assigned, assignments_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=assignments_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, assignments_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(assignments_table)
 
-    return _fold
+    return fold_sink(
+        assignments_table, query_name, _delta, every=compact_every,
+        maintain=lambda spark: compact_tables(
+            spark, [assignments_table], compact_target_parts
+        ),
+    )

@@ -1,23 +1,23 @@
-"""Streaming Count-Min sketch maintenance: fold each micro-batch's
-token frequencies into a persisted sketch table by APPENDING the
-batch's partial sketch — CM sketches are additive under union, so the
-merged sketch is just the cell-wise sum over everything committed and
-a batch contributes its counts exactly once via the txn-id idempotent
-append (crash-replay of a batch id is a no-op commit, not a double
-count).
+"""Streaming sketch maintenance: fold each micro-batch into a persisted
+sketch table by APPENDING the batch's partial sketch.  Count-Min cells
+and quantile registers add under union, HLL registers take the max and
+KMV minima take the k smallest, so the merged sketch is a bounded fold
+over everything committed and a batch contributes exactly once through
+the txn-id skeleton (``snapshot_sink.fold_sink``; no CAS anchor — the
+appends commute).
 
 This is the sketch's scale story: the hot path never reads the
 existing sketch (no read-modify-write, no upsert contention — one
 bounded append of ≤ depth × width skinny rows per batch), and serving
 (``operators/sketch.cms_from_table``) folds the history with one
 bounded aggregation.  ``merge_every`` bounds the history: every N
-batches the history is re-aggregated to ≤ depth × width rows and
-committed as one overwrite.  The merge preserves every estimate
-bit-for-bit (sum of sums); because txn ids live in the commit LOG,
-which ``vacuum`` trims, the merge+vacuum pair assumes the stream's
-replay horizon is the most recent batch (Structured Streaming's
-contract) — the same quiesced-maintenance doctrine as clustered
-compaction.
+batches the history is re-aggregated and committed as one overwrite,
+then vacuumed.  The merge preserves every estimate bit-for-bit (sum of
+sums).  Txn ids live in the commit log and ``vacuum`` deletes only
+data parts and stale temp files, never a log entry, so a replay of a
+batch older than a merge is still a no-op through its txn id.  The
+merge's overwrite is not CAS-anchored: run it quiesced, the same
+maintenance doctrine as clustered compaction.
 """
 
 from __future__ import annotations
@@ -27,25 +27,32 @@ from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.operators.sketch import cms_build
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    append,
     overwrite,
     read_snapshot,
     vacuum,
 )
+from airflow_crypto_btc_spark.streaming.snapshot_sink import fold_sink
+
+
+def _overwrite_merged(
+    spark: SparkSession, table: str, merged: DataFrame
+) -> None:
+    """Replace the sketch history with its merge, then drop the old parts."""
+    overwrite(spark, merged, table)
+    vacuum(table)
 
 
 def cms_merge(spark: SparkSession, sketch_table: str) -> None:
     """Collapse the per-batch history to one ≤ depth × width row set
     (one overwrite commit).  Cell-wise sum of sums — no estimate
-    changes.  Run from the maintenance path (or ``merge_every``), not
-    concurrently with an unbounded replay horizon."""
+    changes.  Run from the maintenance path (or ``merge_every``), with
+    no other writer on the table."""
     merged = (
         read_snapshot(spark, sketch_table)
         .groupBy("d", "w")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
-    overwrite(spark, merged, sketch_table)
-    vacuum(sketch_table)
+    _overwrite_merged(spark, sketch_table, merged)
 
 
 def cms_sink(
@@ -58,25 +65,14 @@ def cms_sink(
 ):
     """``foreachBatch`` callback folding each batch's partial sketch
     into the table."""
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        part = cms_build(
+    return fold_sink(
+        sketch_table, query_name,
+        lambda batch_df, snap: cms_build(
             batch_df, depth=depth, width=width, text_col=text_col
-        )
-        committed = append(
-            spark, part, sketch_table,
-            txn_id=f"{query_name}:{batch_id}",
-        )
-        if committed == -1:
-            # crash-replay of an already-committed batch: the append
-            # was an idempotent no-op, so maintenance must not commit
-            # either — a replay folds NOTHING, not even a merge
-            return
-        if merge_every and (batch_id + 1) % merge_every == 0:
-            cms_merge(spark, sketch_table)
-
-    return _fold
+        ),
+        cas=False, every=merge_every,
+        maintain=lambda spark: cms_merge(spark, sketch_table),
+    )
 
 
 def hll_sink(
@@ -97,21 +93,16 @@ def hll_sink(
         hll_registers,
     )
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        part = hll_registers(batch_df, m=m, text_col=text_col)
-        committed = append(
-            spark, part, registers_table,
-            txn_id=f"{query_name}:{batch_id}",
-        )
-        if committed == -1:
-            return  # replay: no append, no maintenance (see cms_sink)
-        if merge_every and (batch_id + 1) % merge_every == 0:
-            merged = hll_from_table(spark, registers_table)
-            overwrite(spark, merged, registers_table)
-            vacuum(registers_table)
-
-    return _fold
+    return fold_sink(
+        registers_table, query_name,
+        lambda batch_df, snap: hll_registers(
+            batch_df, m=m, text_col=text_col
+        ),
+        cas=False, every=merge_every,
+        maintain=lambda spark: _overwrite_merged(
+            spark, registers_table, hll_from_table(spark, registers_table)
+        ),
+    )
 
 
 def qhist_sink(
@@ -124,28 +115,24 @@ def qhist_sink(
     registers into the table — the CM-sketch shape exactly (counts are
     additive under union, the grid is fixed so batch registers always
     align cell-for-cell): one bounded append of ≤n_buckets skinny rows
-    per batch, txn-id idempotent, no read-modify-write on the hot
-    path; serving folds history with ``sketch.qhist_from_table``."""
+    per batch, no read-modify-write on the hot path; serving folds
+    history with ``sketch.qhist_from_table``."""
     from airflow_crypto_btc_spark.operators.sketch import (
         qhist_from_table,
         qhist_registers,
     )
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        part = qhist_registers(batch_df, value_col=value_col)
-        committed = append(
-            spark, part, registers_table,
-            txn_id=f"{query_name}:{batch_id}",
-        )
-        if committed == -1:
-            return  # replay: no append, no maintenance (see cms_sink)
-        if merge_every and (batch_id + 1) % merge_every == 0:
-            merged = qhist_from_table(spark, registers_table)
-            overwrite(spark, merged, registers_table)
-            vacuum(registers_table)
-
-    return _fold
+    return fold_sink(
+        registers_table, query_name,
+        lambda batch_df, snap: qhist_registers(
+            batch_df, value_col=value_col
+        ),
+        cas=False, every=merge_every,
+        maintain=lambda spark: _overwrite_merged(
+            spark, registers_table,
+            qhist_from_table(spark, registers_table),
+        ),
+    )
 
 
 def kmv_merge(
@@ -160,11 +147,10 @@ def kmv_merge(
     changes — same maintenance doctrine as :func:`cms_merge`."""
     from airflow_crypto_btc_spark.operators.sketch import kmv_from_table
 
-    overwrite(
-        spark, kmv_from_table(spark, sketch_table, group_cols, k=k),
-        sketch_table,
+    _overwrite_merged(
+        spark, sketch_table,
+        kmv_from_table(spark, sketch_table, group_cols, k=k),
     )
-    vacuum(sketch_table)
 
 
 def kmv_sink(
@@ -178,8 +164,7 @@ def kmv_sink(
     """``foreachBatch`` callback folding each batch's partial KMV
     sketch into the table — the same no-read-modify-write shape as
     :func:`cms_sink`: the hot path appends the batch's own ≤ k rows
-    per group (txn-id idempotent; a crash-replayed batch folds
-    nothing), and serving (``operators/sketch.kmv_from_table``) takes
+    per group, and serving (``operators/sketch.kmv_from_table``) takes
     the k smallest of the unioned history.  KMV is the one register
     sketch here that is NOT decrementable even in principle (an
     evicted key may have displaced other minima that are gone for
@@ -187,16 +172,11 @@ def kmv_sink(
     rebuild_required (operators/takedown.NON_DECREMENTABLE)."""
     from airflow_crypto_btc_spark.operators.sketch import kmv_sketch
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        part = kmv_sketch(batch_df, key_expr, group_cols, k=k)
-        committed = append(
-            spark, part, sketch_table,
-            txn_id=f"{query_name}:{batch_id}",
-        )
-        if committed == -1:
-            return  # crash-replay: fold nothing, merge nothing
-        if merge_every and (batch_id + 1) % merge_every == 0:
-            kmv_merge(spark, sketch_table, group_cols, k=k)
-
-    return _fold
+    return fold_sink(
+        sketch_table, query_name,
+        lambda batch_df, snap: kmv_sketch(
+            batch_df, key_expr, group_cols, k=k
+        ),
+        cas=False, every=merge_every,
+        maintain=lambda spark: kmv_merge(spark, sketch_table, group_cols, k=k),
+    )

@@ -46,24 +46,23 @@ readers pay — and compaction bounds the changelog's part count.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_crypto_btc_spark.operators.dedup import near_dup_clusters
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
     read_snapshot,
-    read_snapshot_or_none,
     snapshot_changes,
     txn_meta,
     txn_version,
-    vacuum,
+)
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    cas_guard,
+    compact_tables,
+    first_per,
+    maintenance_due,
 )
 
 
@@ -94,10 +93,9 @@ def _latest_wins(log: DataFrame) -> DataFrame:
     ``as_of_batch DESC`` remains as a pure determinism tiebreak — rows
     tied on (doc_id, cluster_id) are byte-identical in the served
     columns (split and moved are functions of doc_id and cluster_id)."""
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("cluster_id").asc(), F.col("as_of_batch").desc()
+    return first_per(
+        log, "doc_id", F.col("cluster_id").asc(), F.col("as_of_batch").desc()
     )
-    return log.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1")
 
 
 def split_assignments(spark: SparkSession, splits_table: str) -> DataFrame:
@@ -285,8 +283,8 @@ def leakage_split_sink(
 
         # --- commit: splits first (the CAS-serialized fold, meta pins
         # the pairs span for replays), then the audit feed
-        try:
-            if folded_v is None:
+        if folded_v is None:
+            with cas_guard():
                 append(
                     spark,
                     new_rows,
@@ -295,20 +293,15 @@ def leakage_split_sink(
                     expect_version=cas_v,
                     meta={"pairs_from": pairs_from, "pairs_to": pairs_to},
                 )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
         append(
             spark,
             moves,
             moves_table,
             txn_id=f"{query_name}:{batch_id}:moves",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (splits_table, moves_table):
-                if read_snapshot_or_none(spark, table) is not None:
-                    compact(
-                        spark, table, target_parts=compact_target_parts
-                    )
-                    vacuum(table)
+        if maintenance_due(compact_every, batch_id):
+            compact_tables(
+                spark, [splits_table, moves_table], compact_target_parts
+            )
 
     return _fold

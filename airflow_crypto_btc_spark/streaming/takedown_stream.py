@@ -26,13 +26,11 @@ retries the batch from a fresh read.
 
 from __future__ import annotations
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.takedown import cascade_takedown
-from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
-    append,
+from airflow_crypto_btc_spark.sources.snapshot_table import append
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    cas_guard,
+    maintenance_due,
 )
 
 
@@ -64,7 +62,7 @@ def takedown_sink(
         gram = None
         if gram_table is not None and text_col in batch_df.columns:
             gram = (gram_table, batch_df.select(id_col, text_col))
-        try:
+        with cas_guard():
             report = cascade_takedown(
                 spark,
                 ids,
@@ -76,8 +74,6 @@ def takedown_sink(
                 pq_codes=pq_codes,
                 gram=gram,
             )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
         if gram_table is not None and gram is None:
             # the decrement needs the departing documents' text; a
             # batch without it must not LOOK decremented — surface an
@@ -144,7 +140,7 @@ def deferred_takedown_sink(
         if batch_df.limit(1).count() == 0:
             return  # idle tick: no tombstones, no apply
         txn = f"{query_name}:{batch_id}"
-        try:
+        with cas_guard():
             takedown_deferred(
                 spark,
                 batch_df.select(id_col),
@@ -152,11 +148,9 @@ def deferred_takedown_sink(
                 id_col,
                 txn_id=txn,
             )
-            if apply_every and (batch_id + 1) % apply_every == 0:
+            if maintenance_due(apply_every, batch_id):
                 apply_deletion_vectors(
                     spark, dv_table, targets, txn_id=f"{txn}:opt"
                 )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
 
     return _fold

@@ -12,10 +12,10 @@ running stream stops it rather than silently mixing scoring regimes
 (same doctrine as ``ann_stream.pq_codes_sink``'s codebooks and
 ``semantic_stream``'s quantizer).
 
-Per batch: deterministic within-batch dedup, already-scored ids
-anti-join away (re-delivery), survivors score via one broadcast model
-join (|batch| × tokens rows, never a corpus aggregate), and the single
-append is txn-id idempotent.  With ``min_logprob`` set, each row also
+Per batch (the ``snapshot_sink.fold_sink`` skeleton): already-scored
+ids anti-join away (re-delivery), survivors score via one broadcast
+model join (|batch| × tokens rows, never a corpus aggregate) and land
+in one exactly-once append.  With ``min_logprob`` set, each row also
 carries a ``passed`` flag — the gate decision is recorded WITH the
 evidence, so downstream consumers filter on it without re-scoring, and
 an audit can always ask "why was this dropped".
@@ -26,24 +26,64 @@ The reference has no streaming surface; this extends its text family
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.text import (
     unigram_logprob_from_model,
 )
 from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
     append,
-    compact,
     current_snapshot,
     read_snapshot_or_none,
     upsert,
     vacuum,
 )
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    SourcePin,
+    cas_guard,
+    compact_tables,
+    fold_sink,
+    maintenance_due,
+    new_rows,
+    snapshot_rows,
+)
+
+
+def _scores_sink(
+    scores_table, query_name, id_col, text_col, min_logprob, models,
+    score, compact_every, compact_target_parts,
+):
+    """The frozen-LM scoring sink: ``score(spark, docs)`` scores the
+    batch's fresh ``(doc_id, text)`` rows against the pinned ``models``;
+    with ``min_logprob`` each row also carries its ``passed`` gate
+    decision."""
+
+    def _delta(batch_df, snap):
+        for model in models:
+            model.check()
+        spark = batch_df.sparkSession
+        fresh = new_rows(
+            batch_df, id_col, F.md5(F.col(text_col)),
+            snapshot_rows(spark, scores_table, snap),
+        )
+        scores = score(
+            spark, fresh.select(F.col(id_col).alias("doc_id"), text_col)
+        ).withColumnRenamed("doc_id", id_col)
+        if min_logprob is not None:
+            scores = scores.withColumn(
+                "passed",
+                F.coalesce(
+                    F.col("mean_logprob") >= min_logprob, F.lit(False)
+                ),
+            )
+        return scores
+
+    return fold_sink(
+        scores_table, query_name, _delta, every=compact_every,
+        maintain=lambda spark: compact_tables(
+            spark, [scores_table], compact_target_parts
+        ),
+    )
 
 
 def quality_scores_sink(
@@ -63,75 +103,14 @@ def quality_scores_sink(
     the corpus generation the gate was calibrated on (checked once at
     construction); every batch then asserts the model table is still
     the SAME COMMIT by version."""
-
-    model_snap = current_snapshot(unigram_table)
-    if (
-        expect_source is not None
-        and model_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale text model: built from "
-            f"{model_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming scores"
-        )
-
-    def _fold(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if current_snapshot(unigram_table).version != model_snap.version:
-            raise ValueError(
-                "text model changed under a running scoring stream — "
-                "restart the sink against the new generation (scores "
-                "from different model generations are not comparable)"
-            )
-        # CAS anchor: the scores version the dedup anti-join is based on
-        # (the model-version assert above stays as the cross-table
-        # fast-fail; the CAS is the same-table guarantee)
-        scores_v = current_snapshot(scores_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
-        committed = read_snapshot_or_none(spark, scores_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
-        scores = unigram_logprob_from_model(
-            spark,
-            fresh.select(F.col(id_col).alias("doc_id"), text_col),
-            unigram_table,
-            text_col,
-        ).withColumnRenamed("doc_id", id_col)
-        if min_logprob is not None:
-            scores = scores.withColumn(
-                "passed",
-                F.coalesce(
-                    F.col("mean_logprob") >= min_logprob, F.lit(False)
-                ),
-            )
-        try:
-            append(
-                spark, scores, scores_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=scores_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, scores_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(scores_table)
-
-    return _fold
+    return _scores_sink(
+        scores_table, query_name, id_col, text_col, min_logprob,
+        [SourcePin(unigram_table, "text model", expect_source)],
+        lambda spark, docs: unigram_logprob_from_model(
+            spark, docs, unigram_table, text_col
+        ),
+        compact_every, compact_target_parts,
+    )
 
 
 def gram_index_sink(
@@ -168,17 +147,10 @@ def gram_index_sink(
     its txn guard runs before staging, so a replay after the merge
     committed can never double-count a df."""
 
-    base_meta = current_snapshot(gram_table).meta
-    if (
-        expect_source is not None
-        and base_meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale gram index: built from "
-            f"{base_meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming"
-        )
-    k = int(base_meta.get("k", 8))
+    # the index grows every batch, so only its base generation is
+    # pinned (no per-batch version check) — ``k`` must stay fixed
+    base = SourcePin(gram_table, "gram index", expect_source).snap
+    k = int(base.meta.get("k", 8))
 
     def _fold(batch_df, batch_id: int) -> None:
         from airflow_crypto_btc_spark.functions.hashing import (
@@ -204,25 +176,15 @@ def gram_index_sink(
         live_k = int(gram_snap.meta.get("k", 8))
         if live_k != k:
             raise ValueError(
-                f"gram index k changed under a running stream "
-                f"({k} -> {live_k}) — scores would mix gram widths"
+                f"gram index k moved {k} -> {live_k} mid-stream — scores "
+                "would mix gram widths; restart the sink"
             )
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
-        seen = read_snapshot_or_none(spark, ids_table)
-        if seen is not None:
-            fresh = fresh.join(
-                seen.select(F.col("id").alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
-        fresh = fresh.select(
-            F.col(id_col).alias("doc_id"), text_col
-        ).localCheckpoint(eager=False)  # scores + gram delta + ids
+        fresh = new_rows(
+            batch_df, id_col, F.md5(F.col(text_col)),
+            read_snapshot_or_none(spark, ids_table), "id",
+        ).select(F.col(id_col).alias("doc_id"), text_col).localCheckpoint(
+            eager=False
+        )  # scores + gram delta + ids
         scores = dup_coverage_from_index(
             spark, fresh, gram_table, text_col
         )
@@ -250,27 +212,20 @@ def gram_index_sink(
             .cast("long")
             .alias("df"),
         )
-        try:
+        with cas_guard():
             upsert(
                 spark, inc, gram_table, ["h"],
                 txn_id=f"{query_name}:{batch_id}:grams",
                 expect_version=gram_v,
             )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
         append(
             spark, fresh.select(F.col("doc_id").alias("id")), ids_table,
             txn_id=f"{query_name}:{batch_id}:ids",
         )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for table in (scores_table, ids_table):
-                try:
-                    compact(
-                        spark, table, target_parts=compact_target_parts
-                    )
-                except ValueError:
-                    continue
-                vacuum(table)
+        if maintenance_due(compact_every, batch_id):
+            compact_tables(
+                spark, [scores_table, ids_table], compact_target_parts
+            )
             vacuum(gram_table)  # upserts are rewrites: drop old gens
 
     return _fold
@@ -297,78 +252,19 @@ def bigram_scores_sink(
     retrain of either under a running stream stops the sink rather
     than silently mixing scoring regimes.  Decisions land with
     evidence — (doc_id, n_bigrams, mean_logprob[, passed]) — via one
-    txn-idempotent CAS append."""
+    exactly-once CAS append."""
+    from airflow_crypto_btc_spark.operators.text import (
+        bigram_logprob_from_model,
+    )
 
-    bi_snap = current_snapshot(bigram_table)
-    uni_snap = current_snapshot(unigram_table)
-    if expect_source is not None:
-        for snap, what in ((bi_snap, "bigram"), (uni_snap, "unigram")):
-            if snap.meta.get("source_version") != expect_source:
-                raise ValueError(
-                    f"stale {what} LM: built from "
-                    f"{snap.meta.get('source_version')!r}, sink expects "
-                    f"{expect_source!r} — rebuild before streaming"
-                )
-
-    def _fold(batch_df, batch_id: int) -> None:
-        from airflow_crypto_btc_spark.operators.text import (
-            bigram_logprob_from_model,
-        )
-
-        spark = batch_df.sparkSession
-        if (
-            current_snapshot(bigram_table).version != bi_snap.version
-            or current_snapshot(unigram_table).version != uni_snap.version
-        ):
-            raise ValueError(
-                "bigram LM changed under a running scoring stream — "
-                "restart the sink against the new generation (scores "
-                "from different model generations are not comparable)"
-            )
-        scores_v = current_snapshot(scores_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
-        )
-        committed = read_snapshot_or_none(spark, scores_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
-        scores = bigram_logprob_from_model(
-            spark,
-            fresh.select(F.col(id_col).alias("doc_id"), text_col),
-            bigram_table,
-            unigram_table,
-            text_col,
-        ).withColumnRenamed("doc_id", id_col)
-        if min_logprob is not None:
-            scores = scores.withColumn(
-                "passed",
-                F.coalesce(
-                    F.col("mean_logprob") >= min_logprob, F.lit(False)
-                ),
-            )
-        try:
-            append(
-                spark, scores, scores_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=scores_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, scores_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(scores_table)
-
-    return _fold
+    return _scores_sink(
+        scores_table, query_name, id_col, text_col, min_logprob,
+        [
+            SourcePin(bigram_table, "bigram LM", expect_source),
+            SourcePin(unigram_table, "unigram LM", expect_source),
+        ],
+        lambda spark, docs: bigram_logprob_from_model(
+            spark, docs, bigram_table, unigram_table, text_col
+        ),
+        compact_every, compact_target_parts,
+    )

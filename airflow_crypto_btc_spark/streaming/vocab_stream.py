@@ -9,27 +9,23 @@ stream stops it rather than silently mixing id spaces (id 7 from two
 vocab generations is two different tokens; a mixed table would be
 silently corrupt training data).
 
-Per batch: deterministic within-batch dedup, already-encoded ids
-anti-join away (re-delivery; append-ignore), one broadcast-map encode
-projection (document rows never shuffle), txn-id idempotent append.
+Per batch (the ``snapshot_sink.fold_sink`` skeleton): already-encoded
+ids anti-join away (re-delivery; append-ignore), one broadcast-map
+encode projection (document rows never shuffle), one exactly-once
+append.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from airflow_crypto_btc_spark.operators.incremental import (
-    ConcurrentMaintenanceError,
-)
 from airflow_crypto_btc_spark.operators.vocab import encode_from_vocab
-from airflow_crypto_btc_spark.sources.snapshot_table import (
-    CommitConflictError,
-    append,
-    compact,
-    current_snapshot,
-    read_snapshot_or_none,
-    vacuum,
+from airflow_crypto_btc_spark.streaming.snapshot_sink import (
+    SourcePin,
+    compact_tables,
+    fold_sink,
+    new_rows,
+    snapshot_rows,
 )
 
 
@@ -44,63 +40,22 @@ def encoded_sink(
     compact_target_parts: int = 4,
 ):
     """``foreachBatch`` callback appending frozen-vocab encodings."""
-    vocab_snap = current_snapshot(vocab_table)
-    if (
-        expect_source is not None
-        and vocab_snap.meta.get("source_version") != expect_source
-    ):
-        raise ValueError(
-            f"stale vocab: built from "
-            f"{vocab_snap.meta.get('source_version')!r}, sink expects "
-            f"{expect_source!r} — rebuild before streaming encodes"
-        )
+    vocab = SourcePin(vocab_table, "vocab", expect_source)
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+    def _delta(batch_df, snap):
+        vocab.check()
         spark = batch_df.sparkSession
-        if current_snapshot(vocab_table).version != vocab_snap.version:
-            raise ValueError(
-                "vocab changed under a running encode stream — restart "
-                "the sink against the new generation (id spaces from "
-                "different vocab generations must never mix)"
-            )
-        # CAS anchor: the encoded-table version the dedup anti-join is
-        # based on — a racing encode fold can never double-append an id
-        # (the vocab-version assert above stays as the cross-table
-        # fast-fail; the CAS is the same-table guarantee)
-        encoded_v = current_snapshot(encoded_table).version
-        w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)))
-        fresh = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1")
-            .drop("_rn")
+        fresh = new_rows(
+            batch_df, id_col, F.md5(F.col(text_col)),
+            snapshot_rows(spark, encoded_table, snap),
         )
-        committed = read_snapshot_or_none(spark, encoded_table)
-        if committed is not None:
-            fresh = fresh.join(
-                committed.select(F.col(id_col).alias("_seen")),
-                fresh[id_col] == F.col("_seen"),
-                "left_anti",
-            )
-        try:
-            append(
-                spark,
-                encode_from_vocab(
-                    spark, fresh, vocab_table, id_col, text_col
-                ),
-                encoded_table,
-                txn_id=f"{query_name}:{batch_id}",
-                expect_version=encoded_v,
-            )
-        except CommitConflictError as exc:
-            raise ConcurrentMaintenanceError(str(exc)) from exc
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            try:
-                compact(
-                    spark, encoded_table,
-                    target_parts=compact_target_parts,
-                )
-            except ValueError:
-                return
-            vacuum(encoded_table)
+        return encode_from_vocab(
+            spark, fresh, vocab_table, id_col, text_col
+        )
 
-    return _fold
+    return fold_sink(
+        encoded_table, query_name, _delta, every=compact_every,
+        maintain=lambda spark: compact_tables(
+            spark, [encoded_table], compact_target_parts
+        ),
+    )

@@ -58,6 +58,7 @@ SMOKE_TESTS = {
     "test_dup_span_scrub_removes_cross_doc_spans_only",  # ExactSubstr scrub
     "test_streaming_split_merge_emits_moves_and_bounds_writes",  # split maintainer
     "test_bm25_matches_pure_python_reference",  # BM25 retrieval
+    "test_fold_sinks_replay_commits_nothing[card_facts]",  # fold skeleton
 }
 
 
@@ -92,3 +93,23 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(label, fn)``: the Spark jobs ``fn`` launches, counted
+    through a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(label: str, fn) -> int:
+        group = f"{label}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, label)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -366,19 +366,6 @@ def test_rollup_maintenance_sink_streaming_fold(spark, tmp_path):
     }
     assert again == want
 
-def _jobs_in(spark, label: str, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through a fresh job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"{label}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, label)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
 
 #: Spark jobs of one steady-state rollup fold into a one-part state:
 #: 1 delta checkpoint, 3 key-range check, 1 schema merge, 7 merge and
@@ -387,7 +374,7 @@ def _jobs_in(spark, label: str, fn) -> int:
 ROLLUP_FOLD_JOB_BUDGET = 14
 
 
-def test_rollup_fold_spark_job_budget(spark, tmp_path):
+def test_rollup_fold_spark_job_budget(spark, tmp_path, jobs_in):
     """A steady-state fold into a one-part state launches at most
     ``ROLLUP_FOLD_JOB_BUDGET`` Spark jobs, and a re-delivered batch id
     launches none inside the sink callback — per-job overhead cannot
@@ -419,10 +406,10 @@ def test_rollup_fold_spark_job_budget(spark, tmp_path):
     sink(batch(0), 0)  # bootstrap: one part
     assert len(current_snapshot(state).files) == 1
     b1 = batch(1)
-    fold = _jobs_in(spark, "rollup-fold", lambda: sink(b1, 1))
+    fold = jobs_in("rollup-fold", lambda: sink(b1, 1))
     assert 0 < fold <= ROLLUP_FOLD_JOB_BUDGET, fold
     v = current_snapshot(state).version
     b1_again = batch(1)
-    assert _jobs_in(spark, "rollup-replay", lambda: sink(b1_again, 1)) == 0
+    assert jobs_in("rollup-replay", lambda: sink(b1_again, 1)) == 0
     assert current_snapshot(state).version == v
 
